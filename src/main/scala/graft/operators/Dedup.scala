@@ -84,7 +84,8 @@ object Dedup {
 
   /** Distinct 3-gram word shingles of `text` — the codegen'd
     * `word_shingles3` expression ([[graft.functions.WordShingles3]];
-    * parity-locked against [[shinglesBuiltin]] by `WordShingles3Spec`).
+    * parity-locked against the test-scope `Builtins.shinglesBuiltin` by
+    * `WordShingles3Spec`).
     * Requires [[graft.plans.GraftExtensions]] registration.
     */
   private[graft] def shingles(text: Column): Column =
@@ -100,19 +101,6 @@ object Dedup {
     */
   private[graft] def shingleHashes(text: Column): Column =
     call_function("shingle_hash60", text)
-
-  /** The builtin interpreted formulation [[shingles]] replaced (kept
-    * for the parity lock).
-    */
-  private[graft] def shinglesBuiltin(text: Column): Column = {
-    val toks = split(text, " ")
-    array_distinct(
-      when(size(toks) >= 3,
-        transform(sequence(lit(0), size(toks) - 3), i =>
-          concat_ws(" ",
-            element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3))))
-        .otherwise(array().cast("array<string>")))
-  }
 
   /** DuckDB twin of [[shingles]] as a bare expression over a `text`
     * column (shared with the streaming decontamination oracle).

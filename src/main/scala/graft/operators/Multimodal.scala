@@ -722,22 +722,6 @@ object Multimodal {
   private[graft] def peakPairs(peaks: Column): Column =
     call_function("peak_pairs", peaks, lit(FpFanout))
 
-  /** The pre-r18 four-deep HOF formulation of [[peakPairs]] — kept as
-    * the parity anchor [[graft.functions.PeakPairs]] is locked against
-    * in `MultimodalSpec` (the binCountsBuiltin convention). Guide §4:
-    * higher-order functions are CodegenFallback, and this one ran per
-    * corpus document on the index side of mm13 AND st89.
-    */
-  private[graft] def peakPairsBuiltin(peaks: Column): Column = flatten(
-    transform(peaks, (p, i) =>
-      filter(
-        transform(sequence(lit(1), lit(FpFanout)), d =>
-          when(i + d <= size(peaks) - 1,
-            struct(i.cast("long").as("f"),
-              (p * 131072L + element_at(peaks, i + d + 1) * 4L +
-                d.cast("long")).as("hkey")))),
-        s => s.isNotNull)))
-
   /** mm13 — AUDIO CONSTELLATION FINGERPRINT MATCH (the Shazam shape:
     * Wang 2003, "An Industrial-Strength Audio Search Algorithm"):
     * per-window peak landmarks pair with their next few windows into
@@ -870,21 +854,11 @@ object Multimodal {
                  FROM fr)"""
   }
 
-  /** The body's 4-bit-binned byte values, decoded ONCE per row.
-    * (The first cut computed the 16-bin histogram row-locally with
-    * the decode inside the per-bin lambda; CollapseProject re-inlines
-    * a withColumn'd array into every consumer, so the O(n) conv pass
-    * ran 16×+ per body — 22 s at sf0.1. The explode→groupBy shape
-    * below decodes each byte exactly once and combines map-side.)
-    */
-  private def binsOf(hx: String, body: String): Column = expr(
-    s"""transform(sequence(0, octet_length($body) - 1), i ->
-          cast(conv(substr($hx, 2*i + 1, 2), 16, 10) as bigint) div 16)""")
-
   /** Per-(doc, bin) counts of one body column via the codegen'd
     * [[graft.functions.NibbleHist]] kernel (r18, guide §4): one binary
     * pass per row, then a ≤16-row posexplode per document — the prior
-    * formulation ([[binsOf]], kept as the spec parity anchor) paid a
+    * formulation (test-scope `Builtins.binCountsBuiltin`, the
+    * `MultimodalSpec` parity anchor) paid a
     * two-char substr + radix parse + string→long cast PER BYTE through
     * a hex round-trip and shipped one exploded row per byte into the
     * aggregation. Zero-count bins are absent from both formulations
@@ -901,15 +875,6 @@ object Multimodal {
       .where(col(as) > 0)
       .select(col("doc_id"), col("bin0").cast("long").as("bin"), col(as))
   }
-
-  /** [[binsOf]]'s original per-byte formulation of [[binCounts]], kept
-    * for the NibbleHist parity lock (`MultimodalSpec`).
-    */
-  private[graft] def binCountsBuiltin(df: DataFrame, body: String, as: String): DataFrame =
-    df.withColumn("hx", hex(col(body)))
-      .select(col("doc_id"), explode(binsOf("hx", body)).as("bin"))
-      .groupBy(col("doc_id"), col("bin"))
-      .agg(count(lit(1)).as(as))
 
   /** mm12 — BYTE-HISTOGRAM χ² DISTANCE over the planted media copies:
     * for every (original, planted copy) pair — the exact-copy cohort
@@ -931,7 +896,7 @@ object Multimodal {
     * two doc/bin-keyed joins and a doc rollup — ≤16 rows per doc past
     * the first aggregation. (The row-local formulation was rejected:
     * CollapseProject re-inlines the decode into every per-bin lambda,
-    * 16×-ing the dominant cost — see [[binsOf]].)
+    * 16×-ing the dominant cost — see `Builtins.binCountsBuiltin`.)
     */
   val mm12_hist_distance: Q = (spark, dir) => {
     graft.plans.GraftExtensions.register(spark)

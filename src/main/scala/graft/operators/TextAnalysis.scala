@@ -1291,13 +1291,6 @@ object TextAnalysis {
         (col("n_docs").cast("double") / col("n_split").cast("double")).as("share"))
   }
 
-  /** Tagged 60-bit n-gram keys off the pre-hashed token array — the
-    * codegen'd [[graft.functions.GramKeys]] expression (requires
-    * [[graft.plans.GraftExtensions]] registration).
-    */
-  private def gramKeys(th: Column, n: Int): Column =
-    call_function("gram_keys", th, lit(n))
-
   private def duckRot7(x: String): String =
     s"(((($x) % ${1L << 53}) << 7) | (($x) >> 53))"
 
@@ -1357,8 +1350,8 @@ object TextAnalysis {
   private[graft] def repSignals(spark: SparkSession, rel: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.register(spark)
     // r18 (guide §2.4 + §4): every statistic below is DOCUMENT-LOCAL,
-    // so the exploded two-exchange formulation (kept as
-    // [[repSignalsBuiltin]], the parity anchor) collapses into the
+    // so the exploded two-exchange formulation (kept in test scope as
+    // `Builtins.repSignalsBuiltin`, the parity anchor) collapses into the
     // codegen'd [[graft.functions.RepStats]] kernel — one pass per
     // document, zero gram rows shuffled. Row set and NULL-fraction
     // semantics are pinned to the builtin: a doc emits a row iff it
@@ -1375,35 +1368,6 @@ object TextAnalysis {
         frac(col("rs.top2"), col("rs.n2")).as("top2_frac"),
         frac(col("rs.top3"), col("rs.n3")).as("top3_frac"),
         frac(col("rs.dup5"), col("rs.n5")).as("dup5_frac"))
-      .withColumn("rep_keep",
-        col("top2_frac") <= RepTop2Max && col("top3_frac") <= RepTop3Max &&
-          col("dup5_frac") <= RepDup5Max)
-  }
-
-  /** The pre-r18 exploded formulation of [[repSignals]] — two keyed
-    * exchanges over ≤ 3 gram rows per token. Kept as the parity anchor
-    * the `CurationSpec` kernel test compares against (the
-    * binCountsBuiltin/entropyOfBuiltin convention).
-    */
-  private[graft] def repSignalsBuiltin(spark: SparkSession, rel: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
-    val grams = rel
-      .select(col("doc_id"), Portable.hash60Array(lmToks).as("th"))
-      .select(col("doc_id"), size(col("th")).cast("long").as("n_tokens"),
-        explode(concat(Seq(2, 3, 5).map(n => gramKeys(col("th"), n)): _*)).as("g"))
-    val per = grams
-      .groupBy(col("doc_id"), col("n_tokens"), col("g"))
-      .agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"), col("n_tokens"), shiftright(col("g"), 60).as("n"))
-      .agg(sum(col("c")).as("n_pos"), max(col("c")).as("top_cnt"),
-        sum(when(col("c") > 1, col("c")).otherwise(0L)).as("dup_pos"))
-    def frac(num: Column, den: Column): Column =
-      num.cast("double") / den.cast("double")
-    per.groupBy(col("doc_id"), col("n_tokens"))
-      .agg(
-        max(when(col("n") === 2, frac(col("top_cnt"), col("n_pos")))).as("top2_frac"),
-        max(when(col("n") === 3, frac(col("top_cnt"), col("n_pos")))).as("top3_frac"),
-        max(when(col("n") === 5, frac(col("dup_pos"), col("n_pos")))).as("dup5_frac"))
       .withColumn("rep_keep",
         col("top2_frac") <= RepTop2Max && col("top3_frac") <= RepTop3Max &&
           col("dup5_frac") <= RepDup5Max)
@@ -1967,37 +1931,14 @@ object TextAnalysis {
     // at sf0.1) into a (doc, ch) aggregation. Relation and all
     // downstream integer arithmetic are bit-identical (the kernel
     // slices code points exactly as substring does); the prior
-    // formulation survives as [[entropyOfBuiltin]], parity-locked in
-    // `TextStatsSpec`-style by `ExpressionProps` + the t37 oracle.
+    // formulation survives in test scope as `Builtins.entropyOfBuiltin`,
+    // parity-locked by `CurationSpec`, `ExpressionProps` + the t37 oracle.
     graft.plans.GraftExtensions.register(docs.sparkSession)
     val counts = docs
       .where(length(col("text")) > 0)
       .select(col("doc_id"),
         explode(call_function("char_counts", col("text"))).as("e"))
       .select(col("doc_id"), col("e.ch").as("ch"), col("e.c").as("c"))
-    val totals = counts.groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("n"), count(lit(1)).as("n_distinct"))
-    counts.join(totals, Seq("doc_id"))
-      .select(col("doc_id"), col("n"), col("n_distinct"),
-        (col("c") * (floor(log(col("n").cast("double")) * 1000).cast("long") -
-          floor(log(col("c").cast("double")) * 1000).cast("long"))).as("t"))
-      .groupBy(col("doc_id"), col("n"), col("n_distinct"))
-      .agg(sum(col("t")).as("tsum"))
-      .select(col("doc_id"), col("n").as("n_chars"), col("n_distinct"),
-        expr("tsum div n").as("ent_mn"))
-  }
-
-  /** [[entropyOf]]'s original per-character formulation, kept as the
-    * CharCounts parity anchor (`TextAnalysisSpec`/`MultimodalSpec`
-    * pattern).
-    */
-  private[graft] def entropyOfBuiltin(docs: DataFrame): DataFrame = {
-    val counts = docs
-      .where(length(col("text")) > 0)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, length(text) - 1)," +
-          " i -> substring(text, i + 1, 1))")).as("ch"))
-      .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))
     val totals = counts.groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n"), count(lit(1)).as("n_distinct"))
     counts.join(totals, Seq("doc_id"))

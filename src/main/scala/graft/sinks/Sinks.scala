@@ -375,6 +375,25 @@ class BucketedStreamTable(spark: SparkSession, table: String, path: String,
   def read(): DataFrame = spark.table(table)
 }
 
+object BucketedStreamTable {
+
+  /** Every stream-maintained bucketed table is 8-way bucketed. */
+  private val Buckets = 8
+
+  /** A fresh table over a scratch directory: the path is
+    * `graft_bkt_<prefix>_…`, the catalog name `graft_<prefix>_` plus
+    * the directory's own unique suffix (dropped first, so a re-run in
+    * the same session starts empty).
+    */
+  def scratch(spark: SparkSession, prefix: String, key: String): BucketedStreamTable = {
+    val path = graft.Tables.scratchDir(s"graft_bkt_${prefix}_")
+    val tbl = s"graft_${prefix}_" +
+      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    new BucketedStreamTable(spark, tbl, path, Buckets, key)
+  }
+}
+
 /** K3 — append sink idempotent by batch identity (the ES doc-id
   * analog, ref utils/MyEsUtil bulk-with-id): every micro-batch writes
   * `batch=<batchId>/` with overwrite, so an at-least-once replay

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
@@ -54,7 +54,7 @@ object Replay {
   val DefaultProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
-  private[streaming] def stateProvider(spark: SparkSession, bigState: Boolean): Unit = {
+  private def stateProvider(spark: SparkSession, bigState: Boolean): Unit = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       if (bigState) RocksDbProvider else DefaultProvider)
     // r18 optimization (guide §5 — per-task state cost): two RocksDB
@@ -193,26 +193,46 @@ object Replay {
     spark.readStream.schema(schema).parquet(streamDir(src, aligned).toString)
   }
 
-  /** Run an append-mode streaming DataFrame to completion
-    * (AvailableNow) through a parquet sink, then return a batch scan of
-    * the result. Checkpoint + output live in fresh scratch dirs (GC'd
-    * at JVM exit), so every replay is independent and repeatable.
-    * `bigState = true` selects RocksDB for queries whose keyed state
-    * scales with the corpus (see [[RocksDbProvider]]).
+  /** The one place a streaming query starts: every `st*` replay and
+    * every serving writer reaches `start()` through here. It selects
+    * the state provider ([[stateProvider]]), allocates the checkpoint
+    * through `Tables.scratchDir` ON THE CALLING THREAD unless the
+    * caller pins one (the kill/resume specs restart over an explicit
+    * checkpoint; `StateLockSpec` discovers the allocated ones by their
+    * `graft_cp_` prefix and creation order), and waits: AvailableNow
+    * plus `awaitTermination`, or — `drained` — no trigger and
+    * [[runUntilDrained]] for the processing-time TTL replay.
+    *
+    * `standing` lists the static artifacts the query `persist()`ed for
+    * its stream-static joins; they are unpersisted when the query ends
+    * on ANY path. A failed query must not keep its cached blocks:
+    * `Verify` and `Bench` catch the failure and carry on in the same
+    * session.
+    */
+  private def run(spark: SparkSession, writer: DataStreamWriter[Row],
+                  bigState: Boolean, checkpoint: Option[String],
+                  drained: Boolean, standing: Seq[DataFrame]): Unit =
+    try {
+      stateProvider(spark, bigState)
+      val w = writer.option("checkpointLocation",
+        checkpoint.getOrElse(graft.Tables.scratchDir("graft_cp_")))
+      val q = (if (drained) w else w.trigger(Trigger.AvailableNow())).start()
+      if (drained) runUntilDrained(q) else q.awaitTermination()
+    } finally standing.foreach(_.unpersist())
+
+  /** Run an append-mode streaming DataFrame to completion through a
+    * parquet sink, then return a batch scan of the result. Checkpoint +
+    * output live in fresh scratch dirs (GC'd at JVM exit), so every
+    * replay is independent and repeatable. `bigState = true` selects
+    * RocksDB for queries whose keyed state scales with the corpus (see
+    * [[RocksDbProvider]]); `standing` as in [[run]].
     */
   def runAppend(spark: SparkSession, out: DataFrame,
-                bigState: Boolean = false): DataFrame = {
-    stateProvider(spark, bigState)
+                bigState: Boolean = false,
+                standing: Seq[DataFrame] = Nil): DataFrame = {
     val outDir = graft.Tables.scratchDir("graft_sink_")
-    val cpDir = graft.Tables.scratchDir("graft_cp_")
-    val q = out.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", cpDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    run(spark, out.writeStream.format("parquet").option("path", outDir)
+      .outputMode("append"), bigState, None, drained = false, standing)
     spark.read.parquet(outDir)
   }
 
@@ -272,20 +292,19 @@ object Replay {
 
   /** Run a streaming DataFrame to completion through `foreachBatch`
     * (the reference's per-batch sink shape — SURVEY §2 K2/K5); the
-    * caller's function receives every micro-batch.
+    * caller's function receives every micro-batch. `outputMode` is
+    * `append` or `update`; `checkpoint` pins the checkpoint for a
+    * kill/resume pair; `drained` and `standing` as in [[run]].
     */
   def runForeachBatch(spark: SparkSession, out: DataFrame,
-                      bigState: Boolean = false)(
-      f: (DataFrame, Long) => Unit): Unit = {
-    stateProvider(spark, bigState)
-    val cpDir = graft.Tables.scratchDir("graft_cp_")
-    val q = out.writeStream
-      .foreachBatch(f)
-      .option("checkpointLocation", cpDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      bigState: Boolean = false,
+                      outputMode: String = "append",
+                      checkpoint: Option[String] = None,
+                      drained: Boolean = false,
+                      standing: Seq[DataFrame] = Nil)(
+      f: (DataFrame, Long) => Unit): Unit =
+    run(spark, out.writeStream.outputMode(outputMode).foreachBatch(f),
+      bigState, checkpoint, drained, standing)
 
   // ------------------------------------------------------------------
   // sentinels (schemas mirror TESTDATA.md; keys negative, far-future

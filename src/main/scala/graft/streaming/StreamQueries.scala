@@ -157,28 +157,26 @@ object StreamQueries {
     * every caller), so the default in-memory provider applies.
     */
   private def upsertServe(spark: SparkSession, base: DataFrame,
-                          keyCols: Seq[String], orderCol: String): DataFrame = {
+                          keyCols: Seq[String], orderCol: String,
+                          standing: Seq[DataFrame] = Nil): DataFrame = {
     val table = new graft.sinks.KeyedUpsertTable(
       spark, graft.Tables.scratchDir("graft_upsert_"), keyCols, orderCol)
-    upsertServeWith(spark, base, table, graft.Tables.scratchDir("graft_cp_"))
+    upsertServeWith(spark, base, table, graft.Tables.scratchDir("graft_cp_"), standing)
   }
 
   /** One AvailableNow pass of the upsert-serving writer against an
     * EXPLICIT table + checkpoint — exposed so `StateCapSpec` can kill
     * and resume the exact production path (same trigger, provider,
     * and idempotent upsert) across two passes over one checkpoint.
+    * `standing` as in [[Replay.runForeachBatch]]: the served table
+    * owns the rows once the pass ends, so the artifacts are spent.
     */
   private[graft] def upsertServeWith(spark: SparkSession, base: DataFrame,
                                      table: graft.sinks.KeyedUpsertTable,
-                                     cp: String): DataFrame = {
-    Replay.stateProvider(spark, bigState = false)
-    val q = base.writeStream
-      .outputMode("update")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => table.upsert(b, id))
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+                                     cp: String,
+                                     standing: Seq[DataFrame] = Nil): DataFrame = {
+    Replay.runForeachBatch(spark, base, outputMode = "update",
+        checkpoint = Some(cp), standing = standing)(table.upsert)
     table.read()
   }
 
@@ -364,11 +362,7 @@ object StreamQueries {
     // argmin/argmax structs and tiebreaks are verbatim, so the streamed
     // index equals the batch-built one bit-for-bit (the oracle is
     // unchanged). Sentinel pre-filtered — nothing is watermark-driven.
-    val path = graft.Tables.scratchDir("graft_bkt_sidx_")
-    val tbl = "graft_sidx_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "vec_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "sidx", "vec_id")
     def indexOf(b: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val vecs = b.select(col("vec_id"), col("embedding").as("v"))
       val enc = vecs.join(broadcast(books), lit(true), "inner")
@@ -391,14 +385,9 @@ object StreamQueries {
       .tableStream(spark, dir, "embeddings", Replay.embeddingsSentinel(spark))
       .where(col("vec_id") >= 0)
       .select(col("vec_id"), col("embedding"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(indexOf(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, stream) { (b, id) =>
+      table.append(indexOf(b), id)
+    }
     table.read()
       .select(col("vec_id"), col("m"), col("code"), col("cell_id"))
   }
@@ -524,27 +513,14 @@ object StreamQueries {
       .groupBy(col("doc_id"), col("eval_id"))
       .agg(count(lit(1)).as("inter"))
       .select(col("doc_id"), col("eval_id"), col("inter"))
-    val path = graft.Tables.scratchDir("graft_bkt_dcon_")
-    val tbl = "graft_dcon_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "doc_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "dcon", "doc_id")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
       .select(col("doc_id"), col("text"))
-    val sq = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(hitsBatch(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    sq.awaitTermination()
-    // the stream is done and the read-back never touches the eval
-    // index: its cached blocks are spent (r19, the r18 advisor's leak
-    // note — the oMap precedent applied here)
-    evk.unpersist()
+    Replay.runForeachBatch(spark, docs, standing = Seq(evk)) { (b, id) =>
+      table.append(hitsBatch(b), id)
+    }
     table.read()
       .select(col("doc_id"), col("eval_id"), col("inter"))
       .where(col("inter") >= D.MinContamHits)
@@ -628,19 +604,10 @@ object StreamQueries {
         .agg(sum(col("d")).as("amicro"))
         .select(col("query_id"), col("vec_id"), col("amicro"))
     }
-    val path = graft.Tables.scratchDir("graft_bkt_adc_")
-    val tbl = "graft_adc_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "query_id")
-    val sq = q.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(adcBatch(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    sq.awaitTermination()
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "adc", "query_id")
+    Replay.runForeachBatch(spark, q) { (b, id) =>
+      table.append(adcBatch(b), id)
+    }
     S.adcTopK(table.read()
       .select(col("query_id"), col("vec_id"), col("amicro")))
   }
@@ -696,19 +663,10 @@ object StreamQueries {
         .agg(sum(col("d")).as("amicro"))
         .select(col("query_id"), col("vec_id"), col("amicro"))
     }
-    val path = graft.Tables.scratchDir("graft_bkt_tadc_")
-    val tbl = "graft_tadc_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "query_id")
-    val sq = q.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(adcBatch(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    sq.awaitTermination()
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "tadc", "query_id")
+    Replay.runForeachBatch(spark, q) { (b, id) =>
+      table.append(adcBatch(b), id)
+    }
     S.adcTopK(table.read()
       .select(col("query_id"), col("vec_id"), col("amicro")))
   }
@@ -773,8 +731,8 @@ object StreamQueries {
     // fractions for families longer than the doc (npos = 0) match the
     // old conditional aggregates. Batch parity is CurationSpec's
     // kernel test; the batch twin is [[graft.operators.TextAnalysis
-    // .repSignals]] (same kernel) with [[TextAnalysis
-    // .repSignalsBuiltin]] as the exploded parity anchor.
+    // .repSignals]] (same kernel) with the test-scope
+    // `Builtins.repSignalsBuiltin` as the exploded parity anchor.
     def frac(num: Column, den: Column): Column =
       when(den > 0, num.cast("double") / den.cast("double"))
     deduped
@@ -984,19 +942,10 @@ object StreamQueries {
       .select(col("content_hash"), col("quality_score"), col("u"), col("split"),
         col("n_bpe_tokens"), col("n_bigrams"), col("sum_lp_micro"),
         (col("sum_w") + col("prior_m")).as("log_odds_micro"))
-    val path = graft.Tables.scratchDir("graft_bkt_cur_")
-    val tbl = "graft_cur_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "content_hash")
-    val q = gated.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(scoreBatch(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "cur", "content_hash")
+    Replay.runForeachBatch(spark, gated) { (b, id) =>
+      table.append(scoreBatch(b), id)
+    }
     table.read()
       .select(col("content_hash"), col("quality_score"), col("u"), col("split"),
         col("n_bpe_tokens"), col("n_bigrams"), col("sum_lp_micro"),
@@ -1040,25 +989,16 @@ object StreamQueries {
     */
   val st19_stream_lm_gate: Q = (spark, dir) => {
     val T = graft.operators.TextAnalysis
-    val path = graft.Tables.scratchDir("graft_bkt_lmg_")
-    val tbl = "graft_lmg_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "doc_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "lmg", "doc_id")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
       .select(col("doc_id"), col("text"))
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(T.lmScore(spark, dir, b)
-          .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
-            col("sum_lp_micro")), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, docs) { (b, id) =>
+      table.append(T.lmScore(spark, dir, b)
+        .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
+          col("sum_lp_micro")), id)
+    }
     table.read()
       .select(col("doc_id"), col("n_bigrams"), col("n_oov"), col("sum_lp_micro"))
       .withColumn("avg_lp_micro",
@@ -1782,23 +1722,14 @@ object StreamQueries {
   val st79_stream_postings: Q = (spark, dir) => {
     graft.plans.GraftExtensions.register(spark)
     val T = graft.operators.TextAnalysis
-    val path = graft.Tables.scratchDir("graft_bkt_spost_")
-    val tbl = "graft_spost_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "token")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "spost", "token")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
       .select(col("doc_id"), col("text"))
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(T.postingsOf(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, docs) { (b, id) =>
+      table.append(T.postingsOf(b), id)
+    }
     T.termProbe(table.read())
   }
 
@@ -1914,23 +1845,14 @@ object StreamQueries {
     */
   val st84_stream_entropy: Q = (spark, dir) => {
     val T = graft.operators.TextAnalysis
-    val path = graft.Tables.scratchDir("graft_bkt_sent_")
-    val tbl = "graft_sent_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "doc_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "sent", "doc_id")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
       .select(col("doc_id"), col("text"))
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(T.entropyOf(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, docs) { (b, id) =>
+      table.append(T.entropyOf(b), id)
+    }
     table.read().select(col("doc_id"), col("n_chars"), col("n_distinct"),
       col("ent_mn"))
   }
@@ -2079,12 +2001,8 @@ object StreamQueries {
     val counts = hits
       .groupBy(col("clip_id"), col("doc_id"), col("off"))
       .agg(count(lit(1)).as("n_aligned"))
-    // upsertServe awaits termination; the serve table owns the rows
-    // now, so the standing index's cached blocks are spent (r19, the
-    // r18 advisor's leak note — the oMap precedent applied here)
-    val served = upsertServe(spark, counts, Seq("clip_id", "doc_id", "off"), "n_aligned")
-    standing.unpersist()
-    M.fingerprintVerdict(served)
+    M.fingerprintVerdict(upsertServe(spark, counts,
+      Seq("clip_id", "doc_id", "off"), "n_aligned", Seq(standing)))
   }
 
   /** N-family streaming — SQ8 QUANTIZED ANN SERVED AT INGEST
@@ -2927,11 +2845,9 @@ object StreamQueries {
       .groupBy(col("n_name"), col("o_year"))
       .agg(sum(col("profit4")).as("profit4"),
         count(lit(1)).as("n_lines"))
-    val served = upsertServe(spark, profits, Seq("n_name", "o_year"),
-      "n_lines")
-    oMap.unpersist() // upsertServe awaits termination; the serve table owns the rows now
-    served.select(col("n_name"), col("o_year"),
-      expr("cast(profit4 div 10000 as bigint)").as("profit"))
+    upsertServe(spark, profits, Seq("n_name", "o_year"), "n_lines", Seq(oMap))
+      .select(col("n_name"), col("o_year"),
+        expr("cast(profit4 div 10000 as bigint)").as("profit"))
   }
 
   /** J-family streaming — THE TWO-ROW CASE-COUNT ACCUMULATOR
@@ -2962,9 +2878,8 @@ object StreamQueries {
       .agg(sum(when(col("is_high"), 1L).otherwise(0L)).as("high_lines"),
         sum(when(!col("is_high"), 1L).otherwise(0L)).as("low_lines"),
         count(lit(1)).as("n_lines"))
-    val served = upsertServe(spark, counts, Seq("lateness"), "n_lines")
-    oMap.unpersist()
-    served.select(col("lateness"), col("high_lines"), col("low_lines"))
+    upsertServe(spark, counts, Seq("lateness"), "n_lines", Seq(oMap))
+      .select(col("lateness"), col("high_lines"), col("low_lines"))
   }
 
   /** T-family streaming — SPLIT-LEAKAGE AUDIT AT INGEST (streaming
@@ -2987,24 +2902,14 @@ object StreamQueries {
     val T = graft.operators.TextAnalysis
     val trainSh = T.trainShinglesOf(graft.Tables.documents(spark, dir))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val path = graft.Tables.scratchDir("graft_bkt_sleak_")
-    val tbl = "graft_sleak_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "doc_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "sleak", "doc_id")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0 && !T.isTrainSplit(col("doc_id")))
       .select(col("doc_id"), col("text"))
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(T.leakageOf(b, trainSh), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    trainSh.unpersist()
+    Replay.runForeachBatch(spark, docs, standing = Seq(trainSh)) { (b, id) =>
+      table.append(T.leakageOf(b, trainSh), id)
+    }
     table.read().select(col("doc_id"), col("n_shingles"), col("n_leaked"),
       col("leak_pm"))
   }
@@ -3120,12 +3025,7 @@ object StreamQueries {
       .where(col("hamming") <= 3)
       .select(col("standing_id").as("doc_a"), col("delta_id").as("doc_b"),
         col("hamming"))
-    // runAppend awaits termination and reads back the sink; the
-    // standing signature table's cached blocks are spent (r19, the
-    // r18 advisor's leak note — the oMap precedent applied here)
-    val res = Replay.runAppend(spark, out)
-    sigS.unpersist()
-    res
+    Replay.runAppend(spark, out, standing = Seq(sigS))
   }
 
   /** A-family streaming — THE ROLLING DISTINCT WINDOW AT INGEST
@@ -3457,23 +3357,14 @@ object StreamQueries {
     */
   val st101_stream_entropy_gate: Q = (spark, dir) => {
     val M = graft.operators.Multimodal
-    val path = graft.Tables.scratchDir("graft_bkt_pent_")
-    val tbl = "graft_pent_" +
-      path.split('/').last.replaceAll("[^a-zA-Z0-9_]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val table = new graft.sinks.BucketedStreamTable(spark, tbl, path, 8, "doc_id")
+    val table = graft.sinks.BucketedStreamTable.scratch(spark, "pent", "doc_id")
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
       .select(col("doc_id"), col("text"))
-    val q = docs.writeStream
-      .outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-        table.append(M.payloadEntropyOf(b), id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, docs) { (b, id) =>
+      table.append(M.payloadEntropyOf(b), id)
+    }
     table.read().select(col("doc_id"), col("n_bytes"), col("n_bins"),
       col("ent_mn"), col("is_opaque"))
   }
@@ -3540,11 +3431,7 @@ object StreamQueries {
         expr("inter * 1000 div uni").as("exact_pm"),
         expr(s"n_match * 1000 div ${D.NumHashes} - inter * 1000 div uni")
           .as("err_pm"))
-    // stream done; the standing hashed-shingle table is spent (r19,
-    // the r18 advisor's leak note)
-    val res = Replay.runAppend(spark, out)
-    hsS.unpersist()
-    res
+    Replay.runAppend(spark, out, standing = Seq(hsS))
   }
 
   val st38_stream_incremental_neardup: Q = (spark, dir) => {
@@ -3596,11 +3483,7 @@ object StreamQueries {
         (size(array_intersect(col("hs"), col("shb"))).cast("double") /
           size(array_union(col("hs"), col("shb"))).cast("double")).as("jaccard"))
       .where(col("jaccard") >= 0.5)
-    // stream done; the standing hashed-shingle table is spent (r19,
-    // the r18 advisor's leak note)
-    val res = Replay.runAppend(spark, out)
-    hsS.unpersist()
-    res
+    Replay.runAppend(spark, out, standing = Seq(hsS))
   }
 
   /** D-family streaming — SEMANTIC DECONTAMINATION AT INGEST
@@ -3792,8 +3675,8 @@ object StreamQueries {
     // (the mm12 lesson), so the O(|toks|·|qarr|) tf scan ran up to
     // 10× per document. Semantics pinned bit-for-bit (StreamingSpec
     // parity test + ExpressionProps model property); the replaced
-    // fold, kept as the parity anchor, lives in
-    // [[hybridLexBuiltin]] below.
+    // fold, kept as the parity anchor, lives in test scope as
+    // `Builtins.hybridLexBuiltin`.
     val lexPerQ = call_function("hybrid_lex",
       toks, col("qarr"), lit(S.NumQueries))
 
@@ -3819,33 +3702,6 @@ object StreamQueries {
         col("n_scored"))
 
     hybridServeOnRead(upsertServe(spark, base, Seq("query_id", "leg"), "n_scored"))
-  }
-
-  /** The interpreted HOF formulation st35's lexical leg replaced
-    * (r19, the hybrid_lex kernel) — kept as the parity anchor:
-    * given `text` and the collected `qarr`, emits the identical
-    * array<struct<query_id, lex_micro, n_match>>. Exercised only by
-    * StreamingSpec's kernel-parity test.
-    */
-  private[graft] def hybridLexBuiltin(text: Column, qarr: Column, numQueries: Int): Column = {
-    val T = graft.operators.TextAnalysis
-    val toks = split(text, " ")
-    val dlC = size(toks).cast("long")
-    val perTerm = transform(qarr, e2 =>
-      struct(e2.getField("query_id").as("query_id"),
-        size(filter(toks, t => t === e2.getField("token"))).cast("long").as("tf"),
-        e2.getField("idf_micro").as("idf_micro"),
-        e2.getField("avgdl").as("avgdl")))
-    transform(
-      sequence(lit(0L), lit((numQueries - 1).toLong)), q =>
-        struct(q.as("query_id"),
-          aggregate(filter(perTerm, p => p.getField("query_id") === q),
-            lit(0L), (acc, p) => acc + T.bm25SMicro(p.getField("tf"), dlC,
-              p.getField("idf_micro"), p.getField("avgdl"))).as("lex_micro"),
-          aggregate(filter(perTerm, p => p.getField("query_id") === q),
-            lit(0L), (acc, p) =>
-              acc + when(p.getField("tf") >= 1, lit(1L)).otherwise(lit(0L)))
-            .as("n_match")))
   }
 
   /** st35's read-side: derive per-leg ranks from the served TopK
@@ -4542,12 +4398,8 @@ object StreamQueries {
         when(col("lane") === "admitted", scrubbed).otherwise(lit("")))
 
     // ---- the ONE stateful step: per-(lane, hash) keeper rollup ----
-    val served = upsertServeWith(spark, frontDoorAgg(laned), table, cp)
-    // stream done, read-back references none of the standing nightly
-    // artifacts: their cached blocks are spent (r19, the r18 advisor's
-    // leak note — the oMap precedent applied here)
-    Seq(rates, tripped, ehB, oneRow, sBuckets).foreach(_.unpersist())
-    served
+    upsertServeWith(spark, frontDoorAgg(laned), table, cp,
+        Seq(rates, tripped, ehB, oneRow, sBuckets))
       .select(col("lane"), col("content_hash"), col("keeper_id"),
         col("n_copies"), col("clean_text"))
   }
@@ -4577,7 +4429,6 @@ object StreamQueries {
     */
   val st111_tws_profile: Q = (spark, dir) => {
     import spark.implicits._
-    Replay.stateProvider(spark, bigState = true)
     val events = Replay.eventsStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("tsu"),
         col("event_type"),
@@ -4589,13 +4440,8 @@ object StreamQueries {
         org.apache.spark.sql.streaming.OutputMode.Update())
     val table = new graft.sinks.KeyedUpsertTable(spark,
       graft.Tables.scratchDir("graft_twsprof_"), Seq("user_id"), "user_id")
-    val q = profiles.toDF().writeStream
-      .outputMode("update")
-      .foreachBatch((b: DataFrame, id: Long) => table.upsert(b, id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Replay.runForeachBatch(spark, profiles.toDF(), bigState = true,
+      outputMode = "update")(table.upsert)
     table.read().where(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"), col("sum_cents"),
         col("first_us"), col("last_us"), col("n_types"), col("n_purchase"))
@@ -4612,7 +4458,6 @@ object StreamQueries {
     */
   val st112_tws_timers: Q = (spark, dir) => {
     import spark.implicits._
-    Replay.stateProvider(spark, bigState = true)
     val orders = Replay.ordersStream(spark, dir)
       .select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").as("ts"))
@@ -4638,7 +4483,6 @@ object StreamQueries {
     */
   val st116_tws_ttl_cache: Q = (spark, dir) => {
     import spark.implicits._
-    Replay.stateProvider(spark, bigState = true)
     val events = Replay.eventsStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("tsu"),
         graft.Tables.cents(col("value")).cast("long").as("cents"))
@@ -4659,12 +4503,8 @@ object StreamQueries {
     // on the SOURCE's termination condition (endOffset == latest);
     // the upsert-last table is slicing-independent, so the result is
     // identical.
-    val q = cached.toDF().writeStream
-      .outputMode("update")
-      .foreachBatch((b: DataFrame, id: Long) => table.upsert(b, id))
-      .option("checkpointLocation", graft.Tables.scratchDir("graft_cp_"))
-      .start()
-    Replay.runUntilDrained(q)
+    Replay.runForeachBatch(spark, cached.toDF(), bigState = true,
+      outputMode = "update", drained = true)(table.upsert)
     table.read().where(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"), col("sum_cents"),
         col("last_us"))

@@ -320,7 +320,7 @@ class CurationSpec extends SparkSpecBase {
       df.orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val fast = rows(graft.operators.TextAnalysis.entropyOf(docs))
-    val slow = rows(graft.operators.TextAnalysis.entropyOfBuiltin(docs))
+    val slow = rows(Builtins.entropyOfBuiltin(docs))
     assert(fast.nonEmpty && fast === slow)
   }
 
@@ -342,7 +342,7 @@ class CurationSpec extends SparkSpecBase {
           Option(r.get(2)), Option(r.get(3)), Option(r.get(4)),
           Option(r.get(5)))).toSeq
     val fast = rows(graft.operators.TextAnalysis.repSignals(spark, docs))
-    val slow = rows(graft.operators.TextAnalysis.repSignalsBuiltin(spark, docs))
+    val slow = rows(Builtins.repSignalsBuiltin(spark, docs))
     assert(fast.nonEmpty && fast === slow)
     assert(fast.map(_._1) === Seq(1L, 2L, 3L, 4L, 7L),
       "docs with no bigram position must emit no row")

@@ -108,7 +108,7 @@ class MultimodalSpec extends SparkSpecBase {
       df.orderBy("doc_id", "bin").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val fast = Multimodal.binCounts(docs, "body", "c")
-    val slow = Multimodal.binCountsBuiltin(docs, "body", "c")
+    val slow = Builtins.binCountsBuiltin(docs, "body", "c")
     assert(fast.schema("bin").dataType === slow.schema("bin").dataType)
     val (f, s) = (rows(fast), rows(slow))
     assert(f.nonEmpty && f === s)
@@ -129,7 +129,7 @@ class MultimodalSpec extends SparkSpecBase {
         .select(col("doc_id"), col("p.f"), col("p.hkey"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val fast = rows(Multimodal.peakPairs(col("peaks")))
-    val slow = rows(Multimodal.peakPairsBuiltin(col("peaks")))
+    val slow = rows(Builtins.peakPairsBuiltin(col("peaks")))
     assert(fast.nonEmpty && fast === slow)
   }
 

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming.{AllocLine, BandRow, FunnelEvent, OrderEvent, Pipelines}
+import graft.streaming.{AllocLine, BandRow, FunnelEvent, OrderEvent, Pipelines, Replay}
 
 case class Ev(ts: Timestamp, user_id: Long, event_type: String)
 case class CKV(k: String, event_time: Timestamp)
@@ -22,6 +22,37 @@ class StreamingSpec extends SparkSpecBase {
   private val sentinel = t("2100-01-01 00:00:00")
 
   private def drain(q: StreamingQuery): Unit = q.processAllAvailable()
+
+  test("Replay is the only place a streaming query starts") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val walk = java.nio.file.Files.walk(root)
+    val code = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readAllLines(p).asScala
+        .map(_.trim).filterNot(l => l.startsWith("//") || l.startsWith("*")))
+      finally walk.close()
+    def sites(token: String) = code.flatMap { case (f, ls) =>
+      ls.filter(_.contains(token)).map(l => s"$f: $l") }
+    assert(sites(".start()").forall(_.startsWith("Replay.scala:")), sites(".start()"))
+    assert(sites(".writeStream").forall(s => s.startsWith("Replay.scala:") ||
+      s.startsWith("Sinks.scala: df.writeStream.format(\"console\")")), sites(".writeStream"))
+  }
+
+  test("Replay.runForeachBatch releases its standing artifacts when the query fails") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val standing = spark.range(8).toDF("k").persist()
+    standing.count()
+    assert(standing.storageLevel.useMemory)
+    val ms = MemoryStream[Long]
+    ms.addData(1L, 2L)
+    intercept[Exception] {
+      Replay.runForeachBatch(spark, ms.toDF(), standing = Seq(standing)) { (_, _) =>
+        throw new IllegalStateException("sink down")
+      }
+    }
+    assert(standing.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+  }
 
   test("st14: the streamed index equals the batch-built artifacts bit-for-bit") {
     val streamed = graft.streaming.StreamQueries.st14_stream_index(spark, sf)
@@ -856,7 +887,7 @@ class StreamingSpec extends SparkSpecBase {
     // the lexical leg's per-document BM25 battery: the codegen'd
     // kernel must emit the identical array<struct<query_id, lex_micro,
     // n_match>> the nested transform/filter/aggregate formulation
-    // (kept as StreamQueries.hybridLexBuiltin) produced — over docs
+    // (kept as Builtins.hybridLexBuiltin) produced — over docs
     // with empty text, < 3 tokens, repeated tokens, consecutive
     // spaces, and terms shared across queries.
     import spark.implicits._
@@ -885,7 +916,7 @@ class StreamingSpec extends SparkSpecBase {
       .toSeq.sorted
     val fast = rows(call_function("hybrid_lex",
       split(col("text"), " "), col("qarr"), lit(3)))
-    val slow = rows(graft.streaming.StreamQueries.hybridLexBuiltin(col("text"), col("qarr"), 3))
+    val slow = rows(Builtins.hybridLexBuiltin(col("text"), col("qarr"), 3))
     assert(fast.nonEmpty && fast === slow)
   }
 

@@ -15,7 +15,7 @@ class WordShingles3Spec extends SparkSpecBase {
     val diff = spark.read.parquet(s"$sf/documents.parquet")
       .select(
         call_function("word_shingles3", col("text")).as("x"),
-        graft.operators.Dedup.shinglesBuiltin(col("text")).as("f"))
+        Builtins.shinglesBuiltin(col("text")).as("f"))
       .where(!(col("x") <=> col("f"))) // null-safe: a NULL divergence must count
       .count()
     assert(diff === 0L)
