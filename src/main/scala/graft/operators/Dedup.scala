@@ -1934,14 +1934,29 @@ object Dedup {
     */
   val d11_incremental_dedup: Q = (spark, dir) => {
     val docs = documents(spark, dir).select(col("doc_id"), col("text"))
-    val existing = docs.where(col("doc_id") % 10 =!= 0)
+    keepersOf(incrementalDeltaOf(docs), docs.where(col("doc_id") % 10 =!= 0))
+  }
+
+  /** d11's delta over any (doc_id, text) relation: every 10th doc,
+    * replanted copies of every 40th, and re-uploads of standing docs
+    * with id ≡ 1 (mod 7) — st37 builds it from its document stream.
+    */
+  private[graft] def incrementalDeltaOf(docs: DataFrame): DataFrame = {
     val delta0 = docs.where(col("doc_id") % 10 === 0)
     val replant = delta0.where(col("doc_id") % 40 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val stale = existing.where(col("doc_id") % 7 === 1)
+    val stale = docs.where(col("doc_id") % 10 =!= 0).where(col("doc_id") % 7 === 1)
       .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    val eh = existing.select(md5(col("text")).as("content_hash")).distinct()
     delta0.unionAll(replant).unionAll(stale)
+  }
+
+  /** d11's admission rule: delta docs whose content the standing
+    * corpus lacks, one min-id keeper per content hash — st37 upserts
+    * it from its delta stream.
+    */
+  private[graft] def keepersOf(delta: DataFrame, existing: DataFrame): DataFrame = {
+    val eh = existing.select(md5(col("text")).as("content_hash")).distinct()
+    delta
       .withColumn("content_hash", md5(col("text")))
       .join(eh, Seq("content_hash"), "left_anti")
       .groupBy(col("content_hash"))
@@ -1981,10 +1996,9 @@ object Dedup {
     * ingest scrub (st42).
     */
   private[graft] def passageChunks(docs: DataFrame): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val nCh = ceil(size(col("toks")) / lit(PassageW.toDouble)).cast("int")
     docs
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), TextAnalysis.lmToks.as("toks"))
       .select(col("doc_id"), posexplode(transform(sequence(lit(0), nCh - 1),
         i => concat_ws(" ", slice(col("toks"), i * PassageW + 1, lit(PassageW))))))
       .toDF("doc_id", "chunk_id", "chunk")

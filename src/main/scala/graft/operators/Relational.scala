@@ -215,11 +215,15 @@ object Relational {
     * fields — one stateless codegen'd projection, no shuffle. The
     * DuckDB twin routes on json_valid.
     */
-  val p14_corrupt_route: Q = (spark, dir) => {
+  val p14_corrupt_route: Q = (spark, dir) => corruptRouteOf(events(spark, dir))
+
+  /** p14's corruption injection and PERMISSIVE routing over any
+    * (event_id, props) relation — st48 passes its event stream.
+    */
+  private[graft] def corruptRouteOf(ev: DataFrame): DataFrame = {
     val raw = when(col("event_id") % 11 === 0, concat(lit("}"), col("props")))
       .otherwise(col("props"))
-    events(spark, dir)
-      .select(col("event_id"), raw.as("raw"))
+    ev.select(col("event_id"), raw.as("raw"))
       .withColumn("p", from_json(col("raw"), "k STRING, _corrupt STRING",
         java.util.Map.of("columnNameOfCorruptRecord", "_corrupt")))
       .select(col("event_id"),
@@ -451,12 +455,17 @@ object Relational {
     * is just `.where` twice over this plan (matched → main, reason →
     * dead-letter), both map-side.
     */
-  val p12_quarantine: Q = (spark, dir) => {
+  val p12_quarantine: Q = (spark, dir) => quarantineOf(events(spark, dir))
+
+  /** p12's fault injection and verdict battery over any (event_id,
+    * props) relation — st25 passes its event stream.
+    */
+  private[graft] def quarantineOf(rel: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
     val propsSchema = StructType(Seq(
       StructField("k", StringType),
       StructField("_corrupt_record", StringType)))
-    val ev = events(spark, dir).select(col("event_id"), col("props"))
+    val ev = rel.select(col("event_id"), col("props"))
     val truncated = ev.where(col("event_id") % 20 === 0)
       .select((col("event_id") + 1000000000L).as("event_id"),
         col("props").substr(lit(1), length(col("props")) - 2).as("props"))
@@ -641,10 +650,15 @@ object Relational {
     * shuffles both sides on custkey once (orders pre-filtered to the
     * urgent slice); final rollup is ≤25 nations.
     */
-  val j31_above_avg_silent: Q = (spark, dir) => {
-    val c = customer(spark, dir)
-    val urgent = orders(spark, dir)
-      .where(col("o_orderpriority") === "1-URGENT")
+  val j31_above_avg_silent: Q = (spark, dir) =>
+    silentRichOf(customer(spark, dir),
+      orders(spark, dir).where(col("o_orderpriority") === "1-URGENT"))
+
+  /** j31's threshold, anti-join and nation rollup: `urgent` is any
+    * relation keyed by `o_custkey` — st98 passes its served
+    * revocation set.
+    */
+  private[graft] def silentRichOf(c: DataFrame, urgent: DataFrame): DataFrame = {
     val threshold = c.where(col("c_acctbal") > 0)
       .agg(avg(graft.Tables.cents(col("c_acctbal"))).as("avg_cents"))
     c.join(urgent, c("c_custkey") === urgent("o_custkey"), "left_anti")
@@ -704,14 +718,25 @@ object Relational {
     * a |suppliers|-group rollup. The correlated form would be two
     * extra fact self-scans; this is why engines decorrelate.
     */
-  val j33_waiting_supplier: Q = (spark, dir) => {
-    val o = orders(spark, dir).where(col("o_orderstatus") === "F")
-    val perSupp = lineitem(spark, dir)
-      .join(o, col("l_orderkey") === col("o_orderkey"))
+  val j33_waiting_supplier: Q = (spark, dir) =>
+    waitingOf(suppLateOf(lineitem(spark, dir), orders(spark, dir)))
+
+  /** j33's finest grain: the per-(order, supplier) lateness flag over
+    * completed orders — st97 upserts it from its lineitem stream.
+    */
+  private[graft] def suppLateOf(li: DataFrame, o: DataFrame): DataFrame = {
+    val done = o.where(col("o_orderstatus") === "F")
+    li.join(done, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
       .agg(max(when(col("l_shipdate") >
         col("o_orderdate") + expr("INTERVAL 90 DAYS"), 1L).otherwise(0L))
         .as("supp_late"))
+  }
+
+  /** j33's two order-level quantifiers and the supplier rollup over
+    * the (ok, sk, supp_late) grain — st97 runs them on read.
+    */
+  private[graft] def waitingOf(perSupp: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("ok"))
     perSupp
       .withColumn("n_supp", count(lit(1)).over(w))
@@ -1132,7 +1157,7 @@ object Relational {
     * broadcast-able part join (type column pruned to 2 columns); 12
     * month-groups with map-side CASE partials.
     */
-  val j43_promo_effect: Q = (spark, dir) => {
+  val j43_promo_effect: Q = (spark, dir) => promoShareOf(
     lineitem(spark, dir)
       .where(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
@@ -1145,11 +1170,15 @@ object Relational {
       .groupBy(col("m"))
       .agg(sum(when(col("is_promo"), col("rev_cents")).otherwise(0L))
         .as("promo_cents"),
-        sum(col("rev_cents")).as("total_cents"))
-      .select(col("m"), (col("promo_cents") / 100).as("promo_rev"),
-        (col("total_cents") / 100).as("total_rev"),
-        expr("promo_cents * 1000 div total_cents").as("promo_pm"))
-  }
+        sum(col("rev_cents")).as("total_cents")))
+
+  /** j43's per-mille division over the monthly (promo, total) cents
+    * sums — st104 runs it on read.
+    */
+  private[graft] def promoShareOf(months: DataFrame): DataFrame =
+    months.select(col("m"), (col("promo_cents") / 100).as("promo_rev"),
+      (col("total_cents") / 100).as("total_rev"),
+      expr("promo_cents * 1000 div total_cents").as("promo_pm"))
 
   /** j44 — TOP SUPPLIER (TPC-H Q15): the supplier(s) with maximum
     * revenue in a quarter. The standard phrases it as a VIEW plus a
@@ -1166,23 +1195,32 @@ object Relational {
     * fact. No unpartitioned window — suppliers scale with SF (the
     * w-family bound honored by the broadcast-max shape instead).
     */
-  val j44_top_supplier: Q = (spark, dir) => {
+  val j44_top_supplier: Q = (spark, dir) =>
     // supplier-grain rollup lineage-cut: both the 1-row MAX leg and
     // the equality join read it, and without the cut each re-derives
     // it from its own fact scan (the scan audit measured 2)
-    val revs = lineitem(spark, dir)
-      .where(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
+    topSupplierOf(quarterRevOf(lineitem(spark, dir)).localCheckpoint(false),
+      supplier(spark, dir))
+
+  /** j44's per-supplier quarter revenue — st102 upserts it from its
+    * lineitem stream.
+    */
+  private[graft] def quarterRevOf(li: DataFrame): DataFrame =
+    li.where(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
       .groupBy(col("l_suppkey"))
       .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
         .cast("long")).as("rev_cents"))
-      .localCheckpoint(false)
+
+  /** j44's broadcast-MAX join-back and supplier lookup over the
+    * supplier grain — st102 runs it on read.
+    */
+  private[graft] def topSupplierOf(revs: DataFrame, s: DataFrame): DataFrame =
     revs.join(broadcast(revs.agg(max(col("rev_cents")).as("max_cents"))),
         col("rev_cents") === col("max_cents"))
-      .join(supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
+      .join(s, col("l_suppkey") === col("s_suppkey"))
       .select(col("l_suppkey").as("s_suppkey"), col("s_name"),
         (col("rev_cents") / 100).as("total_revenue"))
-  }
 
   /** j45 — LARGE-VOLUME CUSTOMERS (TPC-H Q18): orders whose total
     * quantity exceeds a threshold, with their customers — the
@@ -1197,18 +1235,29 @@ object Relational {
     * is tiny and AQE broadcasts it into the orders join; customer
     * joins after, at surviving-order grain.
     */
-  val j45_large_volume: Q = (spark, dir) => {
-    val big = lineitem(spark, dir)
-      .groupBy(col("l_orderkey"))
+  val j45_large_volume: Q = (spark, dir) =>
+    largeVolumeOf(orderQtyOf(lineitem(spark, dir)),
+      orders(spark, dir), customer(spark, dir))
+
+  /** j45's per-order quantity sum — st103 upserts it from its
+    * lineitem stream.
+    */
+  private[graft] def orderQtyOf(li: DataFrame): DataFrame =
+    li.groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).cast("long").as("sum_qty"))
-      .where(col("sum_qty") > 300)
-    big.join(orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(customer(spark, dir), col("o_custkey") === col("c_custkey"))
+
+  /** j45's threshold and dim joins over the per-order sums — st103
+    * runs them on read.
+    */
+  private[graft] def largeVolumeOf(sums: DataFrame, o: DataFrame,
+                                   c: DataFrame): DataFrame =
+    sums.where(col("sum_qty") > 300)
+      .join(o, col("l_orderkey") === col("o_orderkey"))
+      .join(c, col("o_custkey") === col("c_custkey"))
       .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_dt"),
         (cents(col("o_totalprice")).cast("long") / 100).as("total_price"),
         col("sum_qty"))
-  }
 
   /** j46 — DISJUNCTIVE-PREDICATE REVENUE (TPC-H Q19): revenue from
     * three OR-ed (brand, size-band, quantity-band) branches over the
@@ -1767,16 +1816,22 @@ object Relational {
     * production batches them (the maxPartitionBytes knob) or lands a
     * manifest; both change the scan, not this plan.
     */
-  val s16_binaryfile_source: Q = (spark, dir) => {
+  val s16_binaryfile_source: Q = (spark, dir) =>
+    binaryLanesOf(spark.read.format("binaryFile")
+      .load(binObjectsDir(spark, dir) + "/*.bin"))
+
+  /** s16's key parse, BMP decode and lane routing over any binaryFile
+    * relation — st110 passes its binaryFile stream.
+    */
+  private[graft] def binaryLanesOf(objects: DataFrame): DataFrame = {
     val M = graft.operators.Multimodal
-    val raw = spark.read.format("binaryFile")
-      .load(binObjectsDir(spark, dir) + "/*.bin")
+    objects
       .select(
         regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long")
           .as("doc_id"),
         col("length").cast("long").as("byte_len"),
         col("content"))
-    raw.select(col("doc_id"), col("byte_len"),
+      .select(col("doc_id"), col("byte_len"),
         M.decodeBmp(col("content")).as("dims"))
       .select(col("doc_id"), col("byte_len"),
         col("dims").getField("width").as("width"),
@@ -2121,10 +2176,14 @@ object Relational {
     * stays spec-bounded (a14), now a genuinely merge-dependent
     * residue.
     */
-  val a14x_quantile_exact: Q = (spark, dir) => {
+  val a14x_quantile_exact: Q = (spark, dir) => exactQuantilesOf(events(spark, dir))
+
+  /** a14x's exact-regime sketch over any events relation — st81
+    * upserts it from its event stream.
+    */
+  private[graft] def exactQuantilesOf(ev: DataFrame): DataFrame = {
     val sk = graft.functions.QuantileSketch.quantileSketch(4096)(col("value"))
-    events(spark, dir)
-      .select(col("event_type"), col("value"), col("event_id"))
+    ev.select(col("event_type"), col("value"), col("event_id"))
       .where(col("value").isNotNull && col("event_id") < 4000L)
       .groupBy(col("event_type"))
       .agg(sk.as("s"))
@@ -2366,16 +2425,24 @@ object Relational {
     * a double, one exact-rounded divide, floor.
     */
   val a17_kmv_sample: Q = (spark, dir) => {
-    val k = KmvK
     val uh = events(spark, dir)
       .select(col("event_type"), col("user_id"),
         graft.functions.Portable.hash60(
           concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
       .distinct()
     val w = Window.partitionBy(col("event_type")).orderBy(col("h"), col("user_id"))
+    kmvEstimateOf(uh.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= KmvK))
+  }
+
+  /** a17's per-type estimate over the kept (event_type, rank,
+    * user_id, h) sample — st43 runs it on read over its served
+    * sketches.
+    */
+  private[graft] def kmvEstimateOf(kept: DataFrame): DataFrame = {
+    val k = KmvK
     val wt = Window.partitionBy(col("event_type"))
-    uh.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    kept
       .withColumn("n_kept", max(col("rank")).over(wt))
       .withColumn("kth", max(col("h")).over(wt))
       .select(col("event_type"), col("rank"), col("user_id"), col("h"),
@@ -2965,9 +3032,17 @@ object Relational {
     val hot = orders(spark, dir)
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val bf = hot.agg(
-      graft.functions.BloomFilters.bloom(1 << 20)(col("o_orderkey")).as("bf"))
-    val li = lineitem(spark, dir)
+    bloomPruneOf(lineitem(spark, dir), hot, hot.agg(
+      graft.functions.BloomFilters.bloom(1 << 20)(col("o_orderkey")).as("bf")))
+  }
+
+  /** j13's fact-side Bloom probe and exact join: `bf` is the 1-row
+    * summary relation carrying a `bf` struct with the filter `bits` —
+    * st36 passes its served stream-built summary.
+    */
+  private[graft] def bloomPruneOf(fact: DataFrame, hot: DataFrame,
+                                  bf: DataFrame): DataFrame = {
+    val li = fact
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
     val pruned = li
       .join(broadcast(bf),
@@ -3642,11 +3717,22 @@ object Relational {
     * share promotes to decimal before the ×1000.
     */
   val a50_new_vs_returning: Q = (spark, dir) => {
-    val om = orders(spark, dir)
-      .select(col("o_custkey").as("custkey"),
-        trunc(to_date(col("o_orderdate")), "month").as("m"),
-        cents(col("o_totalprice")).cast("long").as("c"))
-    val cohort = om.groupBy(col("custkey")).agg(min(col("m")).as("m0"))
+    val om = orderMonthsOf(orders(spark, dir))
+    newShareOf(newVsRetOf(om, om))
+  }
+
+  /** a50's (custkey, order month, cents) projection of orders. */
+  private[graft] def orderMonthsOf(o: DataFrame): DataFrame =
+    o.select(col("o_custkey").as("custkey"),
+      trunc(to_date(col("o_orderdate")), "month").as("m"),
+      cents(col("o_totalprice")).cast("long").as("c"))
+
+  /** a50's per-month new/returning counts and cents: `om` is judged
+    * against the cohort month of each customer in `all` — st88
+    * upserts them from its order stream against the static table.
+    */
+  private[graft] def newVsRetOf(om: DataFrame, all: DataFrame): DataFrame = {
+    val cohort = all.groupBy(col("custkey")).agg(min(col("m")).as("m0"))
     om.join(cohort, Seq("custkey"))
       .withColumn("is_new", col("m") === col("m0"))
       .groupBy(date_format(col("m"), "yyyy-MM").as("m"))
@@ -3654,11 +3740,16 @@ object Relational {
         sum(when(!col("is_new"), 1L).otherwise(0L)).as("n_ret"),
         sum(when(col("is_new"), col("c")).otherwise(0L)).as("rev_new"),
         sum(when(!col("is_new"), col("c")).otherwise(0L)).as("rev_ret"))
-      .select(col("m"), col("n_new"), col("n_ret"), col("rev_new"),
-        col("rev_ret"),
-        expr("cast(cast(rev_new as decimal(38,0)) * 1000" +
-          " div (rev_new + rev_ret) as bigint)").as("new_share_pm"))
   }
+
+  /** a50's per-mille new-customer revenue share — st88 runs it on
+    * read.
+    */
+  private[graft] def newShareOf(months: DataFrame): DataFrame =
+    months.select(col("m"), col("n_new"), col("n_ret"), col("rev_new"),
+      col("rev_ret"),
+      expr("cast(cast(rev_new as decimal(38,0)) * 1000" +
+        " div (rev_new + rev_ret) as bigint)").as("new_share_pm"))
 
   /** j26 — ORDER FULFILLMENT LEAD TIME by month: per order month, how
     * many orders, total line items, and the exact average days from
@@ -3692,17 +3783,6 @@ object Relational {
         expr("lead_days_sum * 1000 div n_orders").as("avg_lead_mpd"))
   }
 
-  /** w20 — WEEKDAY×HOUR ACTIVITY HEATMAP in long form: event counts
-    * and exact per-mille share for every (day-of-week, hour) cell —
-    * the 168-cell traffic fingerprint capacity planning and anomaly
-    * baselines (a30/st66) read. Weekday numbering is pinned through
-    * the same rebase f03 locked (DuckDB 0=Sunday → +1 to Spark's
-    * 1=Sunday); share is cross-multiplied against the 1-row total.
-    *
-    * Scale shape: one (dow, hour) rollup with map-side partials into
-    * a ≤168-row relation; total broadcast. Output bounded by the
-    * clock, not the data.
-    */
   /** w21 — EWMA WITH EXACT DYADIC WEIGHTS (α = 1/2, truncated at
     * [[EwmaDepth]] terms): the time-series smoother, made hash-exact
     * cross-engine by arithmetic design rather than tolerance. A
@@ -3724,12 +3804,21 @@ object Relational {
     * priority and orders by a CALENDAR-bounded axis (the w19/w20
     * discipline): partition size = |days|, never data-volume.
     */
-  val w21_ewma: Q = (spark, dir) => {
-    val daily = orders(spark, dir)
-      .groupBy(col("o_orderpriority").as("priority"),
+  val w21_ewma: Q = (spark, dir) => ewmaOf(dailyRevOf(orders(spark, dir)))
+
+  /** w21's per-(priority, day) revenue grain — st95 upserts it from
+    * its order stream.
+    */
+  private[graft] def dailyRevOf(o: DataFrame): DataFrame =
+    o.groupBy(col("o_orderpriority").as("priority"),
         to_date(col("o_orderdate")).as("dt"))
       .agg(sum(graft.Tables.cents(col("o_totalprice")).cast("long"))
         .as("rev_cents"))
+
+  /** w21's dyadic smoother over the daily grain — st95 runs it on
+    * read.
+    */
+  private[graft] def ewmaOf(daily: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("priority")).orderBy(col("dt"))
     val ewma = (0 until EwmaDepth).map { i =>
       coalesce(lag(col("rev_cents"), i).over(w), lit(0L)).cast("double") /
@@ -3893,11 +3982,32 @@ object Relational {
         FROM d WINDOW w AS (PARTITION BY priority ORDER BY dt)"""
   }
 
-  val w20_weekly_heatmap: Q = (spark, dir) => {
-    val cells = events(spark, dir)
-      .groupBy(dayofweek(col("ts")).cast("long").as("dow1"),
+  /** w20 — WEEKDAY×HOUR ACTIVITY HEATMAP in long form: event counts
+    * and exact per-mille share for every (day-of-week, hour) cell —
+    * the 168-cell traffic fingerprint capacity planning and anomaly
+    * baselines (a30/st66) read. Weekday numbering is pinned through
+    * the same rebase f03 locked (DuckDB 0=Sunday → +1 to Spark's
+    * 1=Sunday); share is cross-multiplied against the 1-row total.
+    *
+    * Scale shape: one (dow, hour) rollup with map-side partials into
+    * a ≤168-row relation; total broadcast. Output bounded by the
+    * clock, not the data.
+    */
+  val w20_weekly_heatmap: Q = (spark, dir) =>
+    heatShareOf(heatCellsOf(events(spark, dir)))
+
+  /** w20's (dow, hour) cell counts — st87 upserts them from its event
+    * stream.
+    */
+  private[graft] def heatCellsOf(ev: DataFrame): DataFrame =
+    ev.groupBy(dayofweek(col("ts")).cast("long").as("dow1"),
         hour(col("ts")).cast("long").as("hr"))
       .agg(count(lit(1)).as("n_events"))
+
+  /** w20's per-mille share against the 1-row total — st87 runs it on
+    * read.
+    */
+  private[graft] def heatShareOf(cells: DataFrame): DataFrame = {
     val tot = cells.agg(sum(col("n_events")).as("n_total"))
     cells.join(broadcast(tot), lit(true), "inner")
       .select(col("dow1"), col("hr"), col("n_events"),
@@ -3955,21 +4065,26 @@ object Relational {
     * rollup aggregation (Spark expands grouping sets BEFORE the
     * exchange — partials combine map-side at every grain).
     */
-  val a49_rollup_revenue: Q = (spark, dir) => {
-    val dims = customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(nation(spark, dir)
-        .select(col("n_nationkey"), col("n_regionkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(region(spark, dir)
-        .select(col("r_regionkey"), col("r_name"))),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"), col("n_name"))
-    orders(spark, dir)
-      .select(col("o_custkey"), cents(col("o_totalprice")).cast("long").as("c"))
-      .join(dims, col("o_custkey") === col("c_custkey"))
+  val a49_rollup_revenue: Q = (spark, dir) =>
+    regionOrdersOf(orders(spark, dir), customer(spark, dir),
+        nation(spark, dir), region(spark, dir))
       .rollup(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_orders"), sum(col("c")).as("rev_cents"),
         grouping_id().cast("long").as("gid"))
+
+  /** a49's (o_custkey, c cents) orders tagged with their customer's
+    * region and nation — st85 aggregates its order stream through it.
+    */
+  private[graft] def regionOrdersOf(o: DataFrame, c: DataFrame, n: DataFrame,
+                                    r: DataFrame): DataFrame = {
+    val dims = c.select(col("c_custkey"), col("c_nationkey"))
+      .join(broadcast(n.select(col("n_nationkey"), col("n_regionkey"), col("n_name"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(r.select(col("r_regionkey"), col("r_name"))),
+        col("n_regionkey") === col("r_regionkey"))
+      .select(col("c_custkey"), col("r_name"), col("n_name"))
+    o.select(col("o_custkey"), cents(col("o_totalprice")).cast("long").as("c"))
+      .join(dims, col("o_custkey") === col("c_custkey"))
   }
 
   /** a48 — DAILY-REVENUE AUTOCORRELATION at lags 1 and 7: Pearson r
@@ -4490,10 +4605,14 @@ object Relational {
     * the structurally different way (row_number edges), checking
     * semantics, not implementation.
     */
-  val w05_ohlc_candles: Q = (spark, dir) => {
+  val w05_ohlc_candles: Q = (spark, dir) => ohlcOf(events(spark, dir))
+
+  /** w05's candle aggregate over any events relation — st52 upserts
+    * it from its event stream.
+    */
+  private[graft] def ohlcOf(ev: DataFrame): DataFrame = {
     val ord = struct(col("tsu"), col("event_id"))
-    events(spark, dir)
-      .where(col("value").isNotNull)
+    ev.where(col("value").isNotNull)
       .select(col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd HH").as("hour"),
         cents(col("value")).cast("long").as("c"),
@@ -4681,17 +4800,30 @@ object Relational {
     * scale the exact column is the expensive side — that is the
     * point of the sketch).
     */
-  val a23_count_min: Q = (spark, dir) => {
+  val a23_count_min: Q = (spark, dir) =>
+    cmsProbeOf(cmsOf(events(spark, dir)), customer(spark, dir), events(spark, dir))
+
+  /** a23's d×w counter grid over any events relation — st53 upserts
+    * it from its event stream.
+    */
+  private[graft] def cmsOf(ev: DataFrame): DataFrame = {
     val P = graft.functions.Portable
     val h = P.hash60(concat(lit("cms:"), col("user_id").cast("string")))
     val rows = (0 until CmsDepth).map(r =>
       struct(lit(r.toLong).as("r"),
         pmod(P.xorMix(r, h), lit(CmsWidth)).as("bucket")))
-    val cms = events(spark, dir)
-      .select(col("user_id"), explode(array(rows: _*)).as("rb"))
+    ev.select(col("user_id"), explode(array(rows: _*)).as("rb"))
       .groupBy(col("rb.r").as("r"), col("rb.bucket").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-    val probes = customer(spark, dir)
+  }
+
+  /** a23's probe estimates and exact audit against a (r, bucket, cnt)
+    * grid — st53 runs them on read over its served grid.
+    */
+  private[graft] def cmsProbeOf(cms: DataFrame, c: DataFrame,
+                                ev: DataFrame): DataFrame = {
+    val P = graft.functions.Portable
+    val probes = c
       .where(col("c_custkey") % 50 === 0)
       .select(col("c_custkey").as("user_id"))
     val ph = P.hash60(concat(lit("cms:"), col("user_id").cast("string")))
@@ -4703,7 +4835,7 @@ object Relational {
     val est = probeRows.join(cms, Seq("r", "bucket"), "left")
       .groupBy(col("user_id"))
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est_cnt"))
-    val exact = events(spark, dir).groupBy(col("user_id"))
+    val exact = ev.groupBy(col("user_id"))
       .agg(count(lit(1)).as("exact_cnt"))
     est.join(exact, Seq("user_id"), "left")
       .select(col("user_id"), coalesce(col("exact_cnt"), lit(0L)).as("exact_cnt"),
@@ -4946,10 +5078,20 @@ object Relational {
     * needs a calendar spine — deliberately out: the series is keyed
     * by first-seen days).
     */
-  val w08_cumulative_users: Q = (spark, dir) => {
-    val firstDay = events(spark, dir)
-      .select(col("user_id"), to_date(col("ts")).as("day"))
+  val w08_cumulative_users: Q = (spark, dir) =>
+    cumulativeUsersOf(firstDayOf(events(spark, dir)))
+
+  /** w08's per-user first active day — st63 upserts it from its event
+    * stream.
+    */
+  private[graft] def firstDayOf(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
+
+  /** w08's daily new-user counts and running total over the
+    * (user_id, first_day) grain — st63 runs them on read.
+    */
+  private[graft] def cumulativeUsersOf(firstDay: DataFrame): DataFrame = {
     val daily = firstDay.groupBy(col("first_day"))
       .agg(count(lit(1)).as("n_new"))
     val w = org.apache.spark.sql.expressions.Window
@@ -5772,9 +5914,8 @@ object Relational {
     * SF-invariant here.
     */
   val f10_map_suite: Q = (spark, dir) => {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     documents(spark, dir)
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), TextAnalysis.lmToks.as("toks"))
       .select(col("doc_id"), col("toks"),
         map_from_entries(transform(array_distinct(col("toks")),
           t => struct(t.as("k"),

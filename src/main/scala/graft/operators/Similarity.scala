@@ -2308,8 +2308,13 @@ object Similarity {
     * and belongs in decimal(38,0) there (the a41/a48 promotion
     * discipline).
     */
-  val n35_embedding_gram: Q = (spark, dir) => {
-    val e = embeddings(spark, dir).select(col("vec_id"),
+  val n35_embedding_gram: Q = (spark, dir) => gramOf(embeddings(spark, dir))
+
+  /** n35's outer-product expansion and pair aggregate over any
+    * embeddings relation — st92 upserts it from its embedding stream.
+    */
+  private[graft] def gramOf(emb: DataFrame): DataFrame = {
+    val e = emb.select(col("vec_id"),
       transform(col("embedding"),
         x => floor(x.cast("double") * lit(1000.0))).as("q"))
     e.select(col("q"), posexplode(col("q")))

@@ -148,10 +148,9 @@ object TextAnalysis {
     * ingest gate (st54) so both modes judge identically.
     */
   private[graft] def gopherRules(docs: DataFrame): DataFrame = {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val lines = split(col("text"), "\n")
     docs
-      .select(col("doc_id"), col("text"), toks.as("toks"), lines.as("lines"))
+      .select(col("doc_id"), col("text"), lmToks.as("toks"), lines.as("lines"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tok"),
         aggregate(col("toks"), lit(0L), (a, t) => a + length(t)).as("sum_len"),
@@ -633,7 +632,7 @@ object TextAnalysis {
           s => s.getField("dec")), " ").as("decoded"))
     documents(spark, dir)
       .select(col("doc_id"),
-        array_join(filter(split(col("text"), " "), w => length(w) > 0), " ").as("norm"))
+        array_join(lmToks, " ").as("norm"))
       .join(rebuilt, "doc_id")
       .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"),
         (col("decoded") === col("norm")).as("decoded_ok"),
@@ -863,17 +862,29 @@ object TextAnalysis {
     * join-back broadcasts k rows. The oracle's global-window
     * row_number is exactly the plan this avoids.
     */
-  val t28_weighted_sample: Q = (spark, dir) => {
-    val h = Portable.hash60(concat(lit("wsample:"), col("doc_id").cast("string")))
-    val pri = (col("n_chars").cast("double") * lit(1152921504606846976.0)) /
-      (h + lit(1L)).cast("double")
-    val tk = documents(spark, dir)
-      .select(pri.as("pri"), col("doc_id"))
-      .agg(graft.functions.TopK.topK(WSampleK)(col("pri"), col("doc_id")).as("tk"))
+  val t28_weighted_sample: Q = (spark, dir) => weightedSampleOf(
+    documents(spark, dir)
+      .select(wsamplePri.as("pri"), col("doc_id"))
+      .agg(graft.functions.TopK.topK(WSampleK)(col("pri"), col("doc_id")).as("tk")),
+    documents(spark, dir))
+
+  /** t28's per-doc sampling priority n_chars / u, u the doc's hashed
+    * uniform in (0, 1].
+    */
+  private[graft] def wsamplePri: Column =
+    (col("n_chars").cast("double") * lit(1152921504606846976.0)) /
+      (Portable.hash60(concat(lit("wsample:"), col("doc_id").cast("string"))) + lit(1L))
+        .cast("double")
+
+  /** t28's ranked sample rows from a 1-row `tk` top-k struct, joined
+    * back to the doc weights — st57 runs it on read over its served
+    * top-k.
+    */
+  private[graft] def weightedSampleOf(tk: DataFrame, docs: DataFrame): DataFrame = {
     val sample = tk.select(posexplode(col("tk.items")))
       .select((col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("doc_id"), col("col.score").as("pri"))
-    documents(spark, dir).select(col("doc_id"), col("n_chars").as("w"))
+    docs.select(col("doc_id"), col("n_chars").as("w"))
       .join(broadcast(sample), "doc_id")
       .select(col("rnk"), col("doc_id"), col("w"), col("pri"))
   }
@@ -1106,15 +1117,25 @@ object TextAnalysis {
     * one broadcast row. Everything after the rollup is arithmetic on a
     * domain-count-sized table.
     */
-  val t19_domain_mixture: Q = (spark, dir) => {
-    val dom = documents(spark, dir)
-      .select(col("lang"), col("source"),
+  val t19_domain_mixture: Q = (spark, dir) => mixtureOf(
+    domainsOf(documents(spark, dir))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** t19's per-(lang, source) doc and token counts with the
+    * √-tempered mass — st26 upserts them from its document stream.
+    */
+  private[graft] def domainsOf(docs: DataFrame): DataFrame =
+    docs.select(col("lang"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok"))
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
       .withColumn("s_micro",
         floor(sqrt(col("n_tokens").cast("double")) * LmMicro).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** t19's weights and boosts against the domain totals — st26 runs
+    * them on read.
+    */
+  private[graft] def mixtureOf(dom: DataFrame): DataFrame = {
     val tot = dom.agg(sum(col("s_micro")).as("tot_s"), sum(col("n_tokens")).as("tot_tok"))
     dom.join(broadcast(tot), lit(true), "inner")
       .select(col("lang"), col("source"), col("n_docs"), col("n_tokens"),
@@ -2075,9 +2096,8 @@ object TextAnalysis {
     * totals are 1-row broadcasts. No all-pairs anywhere.
     */
   val t41_pmi_collocations: Q = (spark, dir) => {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val base = documents(spark, dir)
-      .select(toks.as("toks"))
+      .select(lmToks.as("toks"))
       .where(size(col("toks")) >= 2)
     val bigrams = base.select(explode(expr(
       "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
@@ -2093,6 +2113,15 @@ object TextAnalysis {
     val uni = base.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
       .localCheckpoint(false)
+    liftOf(cb, uni)
+  }
+
+  /** t41's lift join over the (w1, w2, cb) bigram and (w, cw) unigram
+    * counts; both totals are sums over the same relations, so the
+    * marginals stay consistent — st100 runs it on read over its
+    * served exact-regime counts.
+    */
+  private[graft] def liftOf(cb: DataFrame, uni: DataFrame): DataFrame = {
     val tt = uni.agg(sum(col("cw")).as("tt"))
     val tb = cb.agg(sum(col("cb")).as("tb"))
     cb.where(col("cb") >= 5)

@@ -231,7 +231,7 @@ class KeyedUpsertTable(spark: SparkSession, path: String,
           .unionByName(batch.withColumn("__pri", lit(1))))
     }
     merged.write.mode("overwrite").parquet(root.resolve(s"v=$batchId").toString)
-    commit(batchId)
+    SinkFiles.atomicMarker(commits, batchId.toString)
   }
 
   private def dedupe(df: DataFrame): DataFrame = {
@@ -242,30 +242,14 @@ class KeyedUpsertTable(spark: SparkSession, path: String,
       .drop("__rn", "__pri")
   }
 
-  private def commit(batchId: Long): Unit = {
-    Files.createDirectories(commits)
-    val tmp = Files.createTempFile(commits, s".$batchId", ".tmp")
-    Files.move(tmp, commits.resolve(batchId.toString),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Drop all but the newest `keep` committed versions (state GC). */
   def vacuum(keep: Int = 2): Unit = {
     val ids = committedBatches.dropRight(keep)
     ids.foreach { id =>
       Files.deleteIfExists(commits.resolve(id.toString))
-      deleteRecursively(root.resolve(s"v=$id"))
+      SinkFiles.deleteRecursively(root.resolve(s"v=$id"))
     }
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val it = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      } finally it.close()
-    }
 }
 
 /** Storage-layout sink — THE BUCKETED TABLE MAINTAINED BY THE STREAM:
@@ -308,13 +292,7 @@ class BucketedStreamTable(spark: SparkSession, table: String, path: String,
   private val commits = Paths.get(path).resolve("_commits")
   private val staged = Paths.get(path).resolve("_staged")
   private val stageRoot = Paths.get(path).resolve("stage")
-
-  private def atomicMarker(dir: Path, name: String): Unit = {
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, s".$name", ".tmp")
-    Files.move(tmp, dir.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  import SinkFiles.{atomicMarker, deleteRecursively}
 
   /** The idempotent, replay-atomic `foreachBatch` function. */
   def append(batch: DataFrame, batchId: Long): Unit = {
@@ -362,15 +340,6 @@ class BucketedStreamTable(spark: SparkSession, table: String, path: String,
     spark.catalog.refreshTable(table)
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val it = Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        it.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      } finally it.close()
-    }
-
   /** The maintained table as a bucketed catalog scan. */
   def read(): DataFrame = spark.table(table)
 }
@@ -392,6 +361,29 @@ object BucketedStreamTable {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     new BucketedStreamTable(spark, tbl, path, Buckets, key)
   }
+}
+
+/** The file-level commit primitives both versioned sinks share. */
+private object SinkFiles {
+
+  /** Create marker `dir/name` atomically: a temp file moved into place,
+    * so a reader sees the marker whole or not at all.
+    */
+  def atomicMarker(dir: Path, name: String): Unit = {
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, s".$name", ".tmp")
+    Files.move(tmp, dir.resolve(name),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val it = Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        it.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      } finally it.close()
+    }
 }
 
 /** K3 — append sink idempotent by batch identity (the ES doc-id

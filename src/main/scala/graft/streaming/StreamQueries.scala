@@ -671,88 +671,37 @@ object StreamQueries {
       .select(col("query_id"), col("vec_id"), col("amicro")))
   }
 
-  /** st28 — THE REPETITION GATE AT INGEST (streaming twin of the
-    * capstone's stage 5, t21's Gopher battery): the document stream
-    * (originals ∪ planted copies — st18's at-least-once corpus) is
-    * content-hash deduplicated, exploded to tagged 60-bit gram keys
-    * (the codegen'd `gram_keys` fold over once-hashed tokens — t21's
-    * exact arithmetic), and rolled up per document by repetition
-    * family, emitting the three fractions and the composite keep flag
-    * as each document's scoring window closes.
-    *
-    * THREE CHAINED STATEFUL OPERATORS — the frontier the round-8
-    * extension point documented (`Curation.scala`), one past st18's
-    * two: (1) `dropDuplicatesWithinWatermark` on content hash,
-    * (2) the gram-level windowed count (state: one row per open
-    * (window, doc, gram-key) — the map-side-collapsed distinct gram
-    * set, ingest-rate bounded), (3) the doc-level windowed rollup
-    * (state: one row per open (window, doc) — the n ∈ {2,3,5}
-    * families collapse into conditional aggregates keyed by the tag
-    * bits, so no per-family operator is needed). Each downstream agg
-    * groups on the upstream's window (the supported window-of-window
-    * chaining); the engine's no-data batches cascade the flush when
-    * the sentinel advances the watermark.
-    *
-    * Sentinel discipline (the round-8 trap note): the watermark node
-    * sits directly after the union, BEFORE every gate — the
-    * sentinel's 1-token text derives zero gram rows, so it feeds no
-    * state, but its 2100 event time still advances the watermark
-    * that closes every real window across all three stores. Every
-    * output column is text-derived (st15's order-independence
-    * argument), so whichever copy survives dedup produces identical
-    * rows, and the oracle is t21's battery over the text-distinct
-    * corpus keyed by content hash.
-    */
-  /** st28's three-op stateful chain over an already-watermarked doc
-    * stream with (text, event_time) — factored so `StreamingSpec` can
-    * drive it through a checkpointed kill/restart on a MemoryStream.
+  /** st28's dedup + repetition-signal chain over an already-watermarked
+    * doc stream with (text, event_time) — factored so `StreamingSpec`
+    * can drive it through a checkpointed kill/restart on a MemoryStream.
     */
   private[graft] def repGateChain(docs: DataFrame): DataFrame = {
-    val P = graft.functions.Portable
-    val toksNE = filter(split(col("text"), " "), t => length(t) > 0)
     val deduped = docs
       .withColumn("content_hash", md5(col("text")))
       .dropDuplicatesWithinWatermark("content_hash")
-    // r18 (guide §2.4 + §4): all three repetition families are
-    // DOCUMENT-local — every gram of a doc shares its single event
-    // time, so the former gram-level windowed count and doc-level
-    // windowed rollup (stateful ops 2 and 3, one open row per
-    // (window, doc, gram) — corpus-sized state until the sentinel
-    // flushed it) never mixed documents. The codegen'd
-    // [[graft.functions.RepStats]] kernel computes the identical
-    // tagged-gram-key statistics row-locally, leaving dedup as the
-    // chain's ONLY stateful operator: rows emit on first arrival
-    // instead of at watermark closure (same rows — every emitted
-    // column is text-derived), per-doc gram state disappears, and the
-    // flush-cascade of chained no-data batches goes with it. A doc
-    // with no bigram position (n_tokens < 2, the sentinel's 1-token
-    // text included) produced no gram rows and thus no output row
-    // before; the n_tokens >= 2 filter pins that row set. NULL
-    // fractions for families longer than the doc (npos = 0) match the
-    // old conditional aggregates. Batch parity is CurationSpec's
-    // kernel test; the batch twin is [[graft.operators.TextAnalysis
-    // .repSignals]] (same kernel) with the test-scope
-    // `Builtins.repSignalsBuiltin` as the exploded parity anchor.
-    def frac(num: Column, den: Column): Column =
-      when(den > 0, num.cast("double") / den.cast("double"))
-    deduped
-      .withColumn("th", P.hash60Array(toksNE))
-      .select(col("content_hash"),
-        size(col("th")).cast("long").as("n_tokens"),
-        call_function("rep_stats", col("th")).as("rs"))
-      .where(col("n_tokens") >= 2)
-      .select(col("content_hash"), col("n_tokens"),
-        frac(col("rs.top2"), col("rs.n2")).as("top2_frac"),
-        frac(col("rs.top3"), col("rs.n3")).as("top3_frac"),
-        frac(col("rs.dup5"), col("rs.n5")).as("dup5_frac"))
-      .withColumn("rep_keep",
-        col("top2_frac") <= graft.operators.TextAnalysis.RepTop2Max &&
-          col("top3_frac") <= graft.operators.TextAnalysis.RepTop3Max &&
-          col("dup5_frac") <= graft.operators.TextAnalysis.RepDup5Max)
+    graft.operators.TextAnalysis.repSignals(docs.sparkSession,
+        deduped.select(col("content_hash").as("doc_id"), col("text")))
+      .withColumnRenamed("doc_id", "content_hash")
   }
 
+  /** st28 — THE REPETITION GATE AT INGEST (streaming twin of the
+    * capstone's stage 5, t21's Gopher battery): the document stream
+    * (originals ∪ planted copies — st18's at-least-once corpus) is
+    * content-hash deduplicated, then scored by t21's own
+    * [[graft.operators.TextAnalysis.repSignals]] keyed by content
+    * hash. Dedup is the ONE stateful operator (r18: all three
+    * repetition families are document-local, so the former gram-level
+    * and doc-level windowed aggregations never mixed documents and
+    * are now the row-local [[graft.functions.RepStats]] kernel): rows
+    * emit on first arrival, and a doc with n_tokens < 2 (the
+    * sentinel's 1-token text included) emits no row. The watermark
+    * node sits directly after the union, before the gate — it is
+    * dedup's TTL clock. Every output column is text-derived (st15's
+    * order-independence argument), so whichever copy survives dedup
+    * produces identical rows, and the oracle is t21's battery over the
+    * text-distinct corpus keyed by content hash.
+    */
   val st28_stream_repetition: Q = (spark, dir) => {
-    graft.plans.GraftExtensions.register(spark)
     val cols = Seq("doc_id", "text", "lang", "source", "n_chars").map(col)
     def docs() = Replay.tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
     val d2 = docs().where(col("doc_id") % 10 === 0 && col("doc_id") >= 0)
@@ -805,9 +754,8 @@ object StreamQueries {
     * (batch stage 5) is deliberately NOT inlined here: its gram-level
     * + doc-level aggregations would push this pipeline to four
     * chained stateful ops whose flush cascades multiply replay
-    * batches; [[st28_stream_repetition]] runs the same gate as its
-    * own three-op chain (dedup → gram agg → doc rollup) over the
-    * same deduped corpus — at deploy, the two pipelines' verdicts
+    * batches; [[st28_stream_repetition]] runs the same gate (dedup →
+    * t21's row-local signals) over the same deduped corpus — at deploy, the two pipelines' verdicts
     * join on content_hash (the batch-side signal-table composition,
     * streamed). Every output column is
     * text-derived (st15's order-independence argument), so original
@@ -857,7 +805,6 @@ object StreamQueries {
     val d2 = docs().where(col("doc_id") % 10 === 0 && col("doc_id") >= 0)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
         col("lang"), col("source"), col("n_chars"))
-    val toksNE = filter(split(col("text"), " "), t => length(t) > 0)
     // r18 (guide §4): the codegen'd max_intersect kernel — one probe
     // set over ds per document instead of the builtin fold's |eval|
     // array_intersect set-builds per document (the gate's measured
@@ -911,7 +858,7 @@ object StreamQueries {
           "train").otherwise("val"))
       .dropDuplicatesWithinWatermark("content_hash")
     def scoreBatch(b: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = b
-      .withColumn("tk", toksNE)
+      .withColumn("tk", T.lmToks)
       .select(col("content_hash"), col("quality_score"), col("u"), col("split"),
         explode(items).as("it"))
       .select(col("content_hash"), col("quality_score"), col("u"), col("split"),
@@ -1019,33 +966,9 @@ object StreamQueries {
     * missing_field by construction and is dropped on read-back by its
     * negative id.
     */
-  val st25_stream_quarantine: Q = (spark, dir) => {
-    import org.apache.spark.sql.types._
-    val propsSchema = StructType(Seq(
-      StructField("k", StringType),
-      StructField("_corrupt_record", StringType)))
-    def ev() = Replay.eventsStream(spark, dir).select(col("event_id"), col("props"))
-    val truncated = ev().where(col("event_id") % 20 === 0)
-      .select((col("event_id") + 1000000000L).as("event_id"),
-        col("props").substr(lit(1), length(col("props")) - 2).as("props"))
-    val wrongKey = ev().where(col("event_id") % 20 === 10)
-      .select((col("event_id") + 2000000000L).as("event_id"),
-        replace(col("props"), lit("\"k\""), lit("\"x\"")).as("props"))
-    val wrongType = ev().where(col("event_id") % 20 === 5)
-      .select((col("event_id") + 3000000000L).as("event_id"),
-        regexp_replace(col("props"), lit("[0-9]+"), lit("\"x\"")).as("props"))
-    val quarantined = ev().unionAll(truncated).unionAll(wrongKey).unionAll(wrongType)
-      .withColumn("parsed", from_json(col("props"), propsSchema,
-        Map("columnNameOfCorruptRecord" -> "_corrupt_record")))
-      .withColumn("reason",
-        when(col("parsed").isNull || col("parsed._corrupt_record").isNotNull,
-          "malformed_json")
-          .when(col("parsed.k").isNull, "missing_field")
-          .when(!col("parsed.k").rlike("^-?[0-9]+$"), "type_mismatch"))
-      .where(col("reason").isNotNull)
-      .select(col("event_id"), col("props"), col("reason"))
-    Replay.runAppend(spark, quarantined).where(col("event_id") >= 0)
-  }
+  val st25_stream_quarantine: Q = (spark, dir) =>
+    Replay.runAppend(spark, graft.operators.Relational.quarantineOf(
+      Replay.eventsStream(spark, dir))).where(col("event_id") >= 0)
 
   /** A-family streaming — THE REVENUE CUBE AT INGEST (streaming twin
     * of a11): the order stream joins the static dims and maintains the
@@ -1129,22 +1052,10 @@ object StreamQueries {
     */
   val st26_stream_mixture_serve: Q = (spark, dir) => {
     val T = graft.operators.TextAnalysis
-    val base = Replay
+    val base = T.domainsOf(Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
-      .where(col("doc_id") >= 0)
-      .select(col("lang"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-    val dom = upsertServe(spark, base, Seq("lang", "source"), "n_docs") // |domains| rows
-      .withColumn("s_micro",
-        floor(sqrt(col("n_tokens").cast("double")) * T.LmMicro).cast("long"))
-    val tot = dom.agg(sum(col("s_micro")).as("tot_s"), sum(col("n_tokens")).as("tot_tok"))
-    dom.join(broadcast(tot), lit(true), "inner")
-      .select(col("lang"), col("source"), col("n_docs"), col("n_tokens"),
-        (col("s_micro").cast("double") / col("tot_s").cast("double")).as("weight"),
-        ((col("s_micro").cast("double") / col("tot_s").cast("double")) /
-          (col("n_tokens").cast("double") / col("tot_tok").cast("double"))).as("boost"))
+      .where(col("doc_id") >= 0))
+    T.mixtureOf(upsertServe(spark, base, Seq("lang", "source"), "n_docs")) // |domains| rows
   }
 
   /** A-family streaming — THE QUANTILE SKETCH AT INGEST (streaming
@@ -1529,27 +1440,19 @@ object StreamQueries {
     */
   val st43_stream_kmv_serve: Q = (spark, dir) => {
     val R = graft.operators.Relational
-    val k = R.KmvK
     val P = graft.functions.Portable
     val ev = Replay.eventsStream(spark, dir)
       .where(col("user_id") >= 0)
       .select(col("event_type"), col("user_id"),
         P.hash60(concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
     val build = ev.groupBy(col("event_type"))
-      .agg(graft.functions.MinK.minK(k)(col("h"), col("user_id")).as("s"))
+      .agg(graft.functions.MinK.minK(R.KmvK)(col("h"), col("user_id")).as("s"))
       .select(col("event_type"), col("s.items").as("items"),
         size(col("s.items")).as("n_kept"))
     val served = upsertServe(spark, build, Seq("event_type"), "n_kept")
-    val wt = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-    served.select(col("event_type"), posexplode(col("items")))
+    R.kmvEstimateOf(served.select(col("event_type"), posexplode(col("items")))
       .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("user_id"), col("col.h").as("h"))
-      .withColumn("n_kept", max(col("rank")).over(wt))
-      .withColumn("kth", max(col("h")).over(wt))
-      .select(col("event_type"), col("rank"), col("user_id"), col("h"),
-        when(col("n_kept") < k, col("n_kept")).otherwise(
-          floor(lit((k - 1).toDouble) * pow(lit(2.0), lit(60.0)) /
-            col("kth").cast("double"))).as("est_distinct"))
+        col("col.id").as("user_id"), col("col.h").as("h")))
   }
 
   /** A-family streaming — THE ROBUST OUTLIER GATE AT INGEST
@@ -1598,25 +1501,15 @@ object StreamQueries {
     * Oracle is t28's verbatim.
     */
   val st57_stream_sample_serve: Q = (spark, dir) => {
-    val k = graft.operators.TextAnalysis.WSampleK
-    val P = graft.functions.Portable
-    val docs = Replay.tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
+    val T = graft.operators.TextAnalysis
+    val build = Replay.tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
-      .select(col("doc_id"),
-        ((col("n_chars").cast("double") * lit(1152921504606846976.0)) /
-          (P.hash60(concat(lit("wsample:"), col("doc_id").cast("string"))) + lit(1L))
-            .cast("double")).as("pri"))
-    val build = docs.groupBy(lit(1L).as("g"))
-      .agg(graft.functions.TopK.topK(k)(col("pri"), col("doc_id")).as("tk"),
+      .select(col("doc_id"), T.wsamplePri.as("pri"))
+      .groupBy(lit(1L).as("g"))
+      .agg(graft.functions.TopK.topK(T.WSampleK)(col("pri"), col("doc_id")).as("tk"),
         count(lit(1)).as("n_seen"))
-      .select(col("g"), col("tk.items").as("items"), col("n_seen"))
-    val served = upsertServe(spark, build, Seq("g"), "n_seen")
-    val sample = served.select(posexplode(col("items")))
-      .select((col("pos") + 1).cast("long").as("rnk"),
-        col("col.id").as("doc_id"), col("col.score").as("pri"))
-    graft.Tables.documents(spark, dir).select(col("doc_id"), col("n_chars").as("w"))
-      .join(broadcast(sample), "doc_id")
-      .select(col("rnk"), col("doc_id"), col("w"), col("pri"))
+    T.weightedSampleOf(upsertServe(spark, build, Seq("g"), "n_seen"),
+      graft.Tables.documents(spark, dir))
   }
 
   /** A-family streaming — THE SEASONAL MONITOR AT INGEST (streaming
@@ -1813,18 +1706,9 @@ object StreamQueries {
     */
   val st85_stream_rollup_serve: Q = (spark, dir) => {
     val T = graft.Tables
-    val dims = T.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(T.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_regionkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(T.region(spark, dir)
-        .select(col("r_regionkey"), col("r_name"))),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("c_custkey"), col("r_name"), col("n_name"))
-    val base = Replay.ordersStream(spark, dir)
-      .where(col("o_custkey") >= 0)
-      .select(col("o_custkey"), T.cents(col("o_totalprice")).cast("long").as("c"))
-      .join(dims, col("o_custkey") === col("c_custkey"))
+    val base = graft.operators.Relational.regionOrdersOf(
+        Replay.ordersStream(spark, dir).where(col("o_custkey") >= 0),
+        T.customer(spark, dir), T.nation(spark, dir), T.region(spark, dir))
       .groupBy(col("r_name"), col("n_name"))
       .agg(count(lit(1)).as("n_orders"), sum(col("c")).as("rev_cents"))
     upsertServe(spark, base, Seq("r_name", "n_name"), "n_orders")
@@ -1933,27 +1817,11 @@ object StreamQueries {
     * is a50's verbatim.
     */
   val st88_stream_new_vs_ret: Q = (spark, dir) => {
-    val T = graft.Tables
-    val cohort = T.orders(spark, dir)
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg(min(trunc(to_date(col("o_orderdate")), "month")).as("m0"))
-    val base = Replay.ordersStream(spark, dir)
-      .where(col("o_custkey") >= 0)
-      .select(col("o_custkey").as("custkey"),
-        trunc(to_date(col("o_orderdate")), "month").as("m"),
-        T.cents(col("o_totalprice")).cast("long").as("c"))
-      .join(cohort, Seq("custkey"))
-      .withColumn("is_new", col("m") === col("m0"))
-      .groupBy(date_format(col("m"), "yyyy-MM").as("m"))
-      .agg(sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
-        sum(when(!col("is_new"), 1L).otherwise(0L)).as("n_ret"),
-        sum(when(col("is_new"), col("c")).otherwise(0L)).as("rev_new"),
-        sum(when(!col("is_new"), col("c")).otherwise(0L)).as("rev_ret"))
-    upsertServe(spark, base, Seq("m"), "n_new")
-      .select(col("m"), col("n_new"), col("n_ret"), col("rev_new"),
-        col("rev_ret"),
-        expr("cast(cast(rev_new as decimal(38,0)) * 1000" +
-          " div (rev_new + rev_ret) as bigint)").as("new_share_pm"))
+    val R = graft.operators.Relational
+    val base = R.newVsRetOf(
+      R.orderMonthsOf(Replay.ordersStream(spark, dir).where(col("o_custkey") >= 0)),
+      R.orderMonthsOf(graft.Tables.orders(spark, dir)))
+    R.newShareOf(upsertServe(spark, base, Seq("m"), "n_new"))
   }
 
   /** MM-family streaming — THE CONSTELLATION FINGERPRINT PROBE AT
@@ -2085,18 +1953,10 @@ object StreamQueries {
     * verbatim.
     */
   val st87_stream_heatmap: Q = (spark, dir) => {
-    val cells = Replay.eventsStream(spark, dir)
-      .where(col("user_id") >= 0)
-      .groupBy(dayofweek(col("ts")).cast("long").as("dow1"),
-        hour(col("ts")).cast("long").as("hr"))
-      .agg(count(lit(1)).as("n_events"))
-    val served = upsertServe(spark, cells, Seq("dow1", "hr"), "n_events")
-      .select(col("dow1"), col("hr"), col("n_events"))
-    val tot = served.agg(sum(col("n_events")).as("n_total"))
-    served.join(broadcast(tot), lit(true), "inner")
-      .select(col("dow1"), col("hr"), col("n_events"),
-        expr("cast(cast(n_events as decimal(38,0)) * 1000 div n_total" +
-          " as bigint)").as("share_pm"))
+    val R = graft.operators.Relational
+    val cells = R.heatCellsOf(
+      Replay.eventsStream(spark, dir).where(col("user_id") >= 0))
+    R.heatShareOf(upsertServe(spark, cells, Seq("dow1", "hr"), "n_events"))
   }
 
   val st72_stream_zscore: Q = (spark, dir) => {
@@ -2357,24 +2217,11 @@ object StreamQueries {
     * pre-filtered. Oracle is w08's verbatim.
     */
   val st63_stream_first_seen: Q = (spark, dir) => {
-    val firstSeen = Replay.eventsStream(spark, dir)
-      .where(col("user_id") >= 0)
-      .select(col("user_id"), to_date(col("ts")).as("day"))
-      .groupBy(col("user_id"))
-      .agg(min(col("day")).as("first_day"))
-      .select(col("user_id"), col("first_day"),
-        (-datediff(col("first_day"), lit("1970-01-01").cast("date")))
-          .cast("long").as("neg_epoch_day"))
-    val served = upsertServe(spark, firstSeen, Seq("user_id"), "neg_epoch_day")
-    val daily = served.groupBy(col("first_day"))
-      .agg(count(lit(1)).as("n_new"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("first_day"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    daily.withColumn("n_cum", sum(col("n_new")).over(w))
-      .select(date_format(col("first_day"), "yyyy-MM-dd").as("dt"),
-        col("n_new"), col("n_cum").cast("long").as("n_cum"))
+    val R = graft.operators.Relational
+    val firstSeen = R.firstDayOf(Replay.eventsStream(spark, dir).where(col("user_id") >= 0))
+      .withColumn("neg_epoch_day",
+        (-datediff(col("first_day"), lit("1970-01-01").cast("date"))).cast("long"))
+    R.cumulativeUsersOf(upsertServe(spark, firstSeen, Seq("user_id"), "neg_epoch_day"))
   }
 
   /** N-family streaming — EMBEDDING CENTERING AT INGEST (streaming
@@ -2419,26 +2266,10 @@ object StreamQueries {
     * `vec_id < 0`. Oracle is n35's verbatim.
     */
   val st92_stream_gram_serve: Q = (spark, dir) => {
-    val pairs = Replay
+    val agg = graft.operators.Similarity.gramOf(Replay
       .tableStream(spark, dir, "embeddings", Replay.embeddingsSentinel(spark))
-      .where(col("vec_id") >= 0)
-      .select(transform(col("embedding"),
-        x => floor(x.cast("double") * lit(1000.0))).as("q"))
-      .select(col("q"), posexplode(col("q")))
-      .select(col("q"), col("pos").as("i"), col("col").as("qi"))
-      .select(col("i"), col("qi"), posexplode(col("q")))
-      .select(col("i"), col("qi"), col("pos").as("j"), col("col").as("qj"))
-      .where(col("j") >= col("i"))
-    val agg = pairs
-      .groupBy(col("i").cast("long").as("dim_i"),
-        col("j").cast("long").as("dim_j"))
-      .agg(count(lit(1)).as("n_vec"),
-        sum(col("qi") * col("qj")).as("s_ij"),
-        sum(col("qi")).as("s_i"),
-        sum(col("qj")).as("s_j"))
+      .where(col("vec_id") >= 0))
     upsertServe(spark, agg, Seq("dim_i", "dim_j"), "n_vec")
-      .select(col("dim_i"), col("dim_j"), col("n_vec"),
-        col("s_ij"), col("s_i"), col("s_j"))
   }
 
   /** J-family streaming — ORDER-COUNT DISTRIBUTION SERVED FROM ITS
@@ -2518,21 +2349,9 @@ object StreamQueries {
     */
   val st95_stream_ewma: Q = (spark, dir) => {
     val R = graft.operators.Relational
-    val base = Replay.ordersStream(spark, dir)
-      .where(col("o_custkey") >= 0)
-      .groupBy(col("o_orderpriority").as("priority"),
-        to_date(col("o_orderdate")).as("dt"))
-      .agg(sum(graft.Tables.cents(col("o_totalprice")).cast("long"))
-        .as("rev_cents"))
-    val served = upsertServe(spark, base, Seq("priority", "dt"), "rev_cents")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("priority")).orderBy(col("dt"))
-    val ewma = (0 until R.EwmaDepth).map { i =>
-      coalesce(lag(col("rev_cents"), i).over(w), lit(0L)).cast("double") /
-        lit(1L << (i + 1))
-    }.reduce(_ + _)
-    served.select(col("priority"), col("dt"), col("rev_cents"),
-      ewma.as("ewma16"))
+    val base = R.dailyRevOf(
+      Replay.ordersStream(spark, dir).where(col("o_custkey") >= 0))
+    R.ewmaOf(upsertServe(spark, base, Seq("priority", "dt"), "rev_cents"))
   }
 
   /** J-family streaming — THE MONOTONE EXISTS FINALIZED AT INGEST
@@ -2581,23 +2400,11 @@ object StreamQueries {
     * Oracle is j33's double-quantifier form verbatim.
     */
   val st97_stream_waiting_supplier: Q = (spark, dir) => {
-    val o = graft.Tables.orders(spark, dir)
-      .where(col("o_orderstatus") === "F")
-      .select(col("o_orderkey"), col("o_orderdate"))
-    val li = Replay.lineitemStream(spark, dir).where(col("l_partkey") >= 0)
-    val perSupp = li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .groupBy(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-      .agg(max(when(col("l_shipdate") >
-        col("o_orderdate") + expr("INTERVAL 90 DAYS"), 1L).otherwise(0L))
-        .as("supp_late"))
-    val served = upsertServe(spark, perSupp, Seq("ok", "sk"), "supp_late")
-    val perOrder = served.groupBy(col("ok").as("ok2"))
-      .agg(count(lit(1)).as("n_supp"), sum(col("supp_late")).as("n_late"))
-    served.where(col("supp_late") === 1L)
-      .join(perOrder, col("ok") === col("ok2"))
-      .where(col("n_supp") >= 2 && col("n_late") === 1)
-      .groupBy(col("sk").as("s_suppkey"))
-      .agg(count(lit(1)).as("numwait"))
+    val R = graft.operators.Relational
+    val perSupp = R.suppLateOf(
+      Replay.lineitemStream(spark, dir).where(col("l_partkey") >= 0),
+      graft.Tables.orders(spark, dir))
+    R.waitingOf(upsertServe(spark, perSupp, Seq("ok", "sk"), "supp_late"))
   }
 
   /** J-family streaming — THE MONOTONE REVOCATION SET (streaming twin
@@ -2620,16 +2427,8 @@ object StreamQueries {
         col("o_orderpriority") === "1-URGENT")
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_urgent"))
-    val served = upsertServe(spark, revoked, Seq("o_custkey"), "n_urgent")
-    val c = graft.Tables.customer(spark, dir)
-    val threshold = c.where(col("c_acctbal") > 0)
-      .agg(avg(graft.Tables.cents(col("c_acctbal"))).as("avg_cents"))
-    c.join(served, c("c_custkey") === served("o_custkey"), "left_anti")
-      .join(broadcast(threshold), lit(true))
-      .where(graft.Tables.cents(col("c_acctbal")) > col("avg_cents"))
-      .groupBy(col("c_nationkey").cast("long").as("nationkey"))
-      .agg(count(lit(1)).as("numcust"),
-        graft.Tables.moneySum(col("c_acctbal")).as("totacctbal"))
+    graft.operators.Relational.silentRichOf(graft.Tables.customer(spark, dir),
+      upsertServe(spark, revoked, Seq("o_custkey"), "n_urgent"))
   }
 
   /** J-family streaming — THE REVOCABLE ARGMAX SERVED FROM SUPPLIER
@@ -2646,21 +2445,11 @@ object StreamQueries {
     * verbatim.
     */
   val st102_stream_top_supplier: Q = (spark, dir) => {
-    val T = graft.Tables
-    val revs = Replay.lineitemStream(spark, dir)
-      .where(col("l_partkey") >= 0 &&
-        col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
-      .groupBy(col("l_suppkey"))
-      .agg(sum(T.cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .cast("long")).as("rev_cents"))
-    val served = upsertServe(spark, revs, Seq("l_suppkey"), "rev_cents")
-    served.join(
-        broadcast(served.agg(max(col("rev_cents")).as("max_cents"))),
-        col("rev_cents") === col("max_cents"))
-      .join(T.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
-      .select(col("l_suppkey").as("s_suppkey"), col("s_name"),
-        (col("rev_cents") / 100).as("total_revenue"))
+    val R = graft.operators.Relational
+    val revs = R.quarterRevOf(
+      Replay.lineitemStream(spark, dir).where(col("l_partkey") >= 0))
+    R.topSupplierOf(upsertServe(spark, revs, Seq("l_suppkey"), "rev_cents"),
+      graft.Tables.supplier(spark, dir))
   }
 
   /** J-family streaming — MONOTONE THRESHOLD OVER A GROWING
@@ -2681,19 +2470,11 @@ object StreamQueries {
     * correlated-readback form verbatim.
     */
   val st103_stream_large_volume: Q = (spark, dir) => {
-    val T = graft.Tables
-    val sums = Replay.lineitemStream(spark, dir)
-      .where(col("l_partkey") >= 0)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("l_quantity")).cast("long").as("sum_qty"))
-    upsertServe(spark, sums, Seq("l_orderkey"), "sum_qty")
-      .where(col("sum_qty") > 300)
-      .join(T.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(T.customer(spark, dir), col("o_custkey") === col("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_dt"),
-        (T.cents(col("o_totalprice")).cast("long") / 100).as("total_price"),
-        col("sum_qty"))
+    val R = graft.operators.Relational
+    val sums = R.orderQtyOf(
+      Replay.lineitemStream(spark, dir).where(col("l_partkey") >= 0))
+    R.largeVolumeOf(upsertServe(spark, sums, Seq("l_orderkey"), "sum_qty"),
+      graft.Tables.orders(spark, dir), graft.Tables.customer(spark, dir))
   }
 
   /** J-family streaming — A NON-MONOTONE RATIO OVER A BOUNDED
@@ -2721,10 +2502,8 @@ object StreamQueries {
           .cast("long")).otherwise(0L)).as("promo_cents"),
         sum(T.cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("long")).as("total_cents"))
-    upsertServe(spark, base, Seq("m"), "total_cents")
-      .select(col("m"), (col("promo_cents") / 100).as("promo_rev"),
-        (col("total_cents") / 100).as("total_rev"),
-        expr("promo_cents * 1000 div total_cents").as("promo_pm"))
+    graft.operators.Relational.promoShareOf(
+      upsertServe(spark, base, Seq("m"), "total_cents"))
   }
 
   /** J-family streaming — THE PRICING SUMMARY AS PURE ADDITIVE STATE
@@ -2935,28 +2714,12 @@ object StreamQueries {
     * Oracle is s16's construction mirror verbatim.
     */
   val st110_stream_binary_ingest: Q = (spark, dir) => {
-    val M = graft.operators.Multimodal
-    val path = graft.operators.Relational.binObjectsDir(spark, dir)
-    val raw = spark.readStream.format("binaryFile")
+    val R = graft.operators.Relational
+    val objects = spark.readStream.format("binaryFile")
       .option("maxFilesPerTrigger", 200)
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(path + "/*.bin")
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1).cast("long")
-          .as("doc_id"),
-        col("length").cast("long").as("byte_len"),
-        M.decodeBmp(col("content")).as("dims"))
-      .select(col("doc_id"), col("byte_len"),
-        col("dims").getField("width").as("width"),
-        col("dims").getField("height").as("height"))
-      .select(col("doc_id"), col("byte_len"), col("width"), col("height"),
-        when(col("width") === 0 || col("height") === 0, "degenerate")
-          .when(least(col("width"), col("height")) < 32, "too_small")
-          .when(col("width") * lit(1000L) > col("height") * lit(3000L) ||
-            col("height") * lit(1000L) > col("width") * lit(3000L),
-            "extreme_aspect")
-          .otherwise("ok").as("lane"))
-    Replay.runAppend(spark, raw)
+      .load(R.binObjectsDir(spark, dir) + "/*.bin")
+    Replay.runAppend(spark, R.binaryLanesOf(objects))
   }
 
   /** MM-family streaming — PERCEPTUAL NEAR-DUP AT INGEST (streaming
@@ -3106,11 +2869,11 @@ object StreamQueries {
     val docs = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .select(col("doc_id"), col("text"))
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val nCh = ceil(size(col("toks")) / lit(W.toDouble)).cast("int")
     val scrubbed = docs
       .join(broadcast(bkeys), lit(true))
-      .select(col("doc_id"), toks.as("toks"), col("bkeys"), col("bits"))
+      .select(col("doc_id"), graft.operators.TextAnalysis.lmToks.as("toks"),
+        col("bkeys"), col("bits"))
       .select(col("doc_id"), transform(sequence(lit(0), nCh - 1),
         i => concat_ws(" ", slice(col("toks"), i * W + 1, lit(W)))).as("chunks"),
         col("bkeys"), col("bits"))
@@ -3189,31 +2952,21 @@ object StreamQueries {
     val build = hotStream
       .groupBy(lit(1L).as("k"))
       .agg(graft.functions.BloomFilters.bloom(1 << 20)(col("o_orderkey")).as("bf"))
-      .select(col("k"), col("bf.bits").as("bits"), col("bf.n_keys").as("n_keys"))
+      .select(col("k"), col("bf"), col("bf.n_keys").as("n_keys"))
     val served = upsertServe(spark, build, Seq("k"), "n_keys")
-
     val hot = graft.Tables.orders(spark, dir)
       .where(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
-    val li = graft.Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    val pruned = li
-      .join(broadcast(served.select(col("bits"))),
-        graft.functions.BloomFilters.mightContain(col("bits"), col("l_orderkey")))
-      .select(li.columns.map(col): _*)
-    pruned.join(hot.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(
-        graft.Tables.moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"),
-        count(lit(1)).as("n_lines"))
+    graft.operators.Relational.bloomPruneOf(graft.Tables.lineitem(spark, dir), hot, served)
   }
 
   /** D-family streaming — INCREMENTAL DEDUP AT INGEST (streaming twin
     * of d11): the arriving delta (originals ∪ the same two planted
     * overlap classes, built from the stream itself) is checked
     * against the STANDING corpus's hash projection by a stateless
-    * stream-static join (left-outer + null-filter — the anti-join
-    * lifted to the micro-batch; the standing side ships hashes only),
+    * stream-static left-anti join (d11's own [[graft.operators.Dedup
+    * .keepersOf]] lifted to the micro-batch; the standing side ships
+    * hashes only),
     * and the within-delta keeper rule runs as ONE update-mode
     * aggregation per content hash served from the keyed upsert table
     * (min-id keeper + copy count, both monotone under late arrivals —
@@ -3225,26 +2978,13 @@ object StreamQueries {
     * never surface. Oracle is d11's.
     */
   val st37_stream_incremental_dedup: Q = (spark, dir) => {
+    val D = graft.operators.Dedup
     val existing = graft.Tables.documents(spark, dir)
       .where(col("doc_id") % 10 =!= 0).select(col("doc_id"), col("text"))
-    val eh = existing.select(md5(col("text")).as("content_hash")).distinct()
-      .withColumn("in_corpus", lit(1))
-    def docs() = Replay.tableStream(spark, dir, "documents",
+    val docs = Replay.tableStream(spark, dir, "documents",
       Replay.documentsSentinel(spark)).select(col("doc_id"), col("text"))
-    val delta0 = docs().where(col("doc_id") % 10 === 0)
-    val replant = docs().where(col("doc_id") % 10 === 0 && col("doc_id") % 40 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-    val stale = docs().where(col("doc_id") % 10 =!= 0 && col("doc_id") % 7 === 1
-        && col("doc_id") >= 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-    val agg = delta0.unionAll(replant).unionAll(stale)
-      .withColumn("content_hash", md5(col("text")))
-      .join(eh, Seq("content_hash"), "left_outer")
-      .where(col("in_corpus").isNull)
-      .groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("keeper_id"), count(lit(1)).as("n_copies"))
+    val agg = D.keepersOf(D.incrementalDeltaOf(docs), existing)
     upsertServe(spark, agg, Seq("content_hash"), "n_copies")
-      .select(col("content_hash"), col("keeper_id"), col("n_copies"))
   }
 
   /** D-family streaming — INCREMENTAL NEAR-DUP AT INGEST (streaming
@@ -3287,11 +3027,11 @@ object StreamQueries {
     * (the st29/st30 carve-out class). Oracle is t41's verbatim.
     */
   val st100_stream_pmi: Q = (spark, dir) => {
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     def base() = Replay
       .tableStream(spark, dir, "documents", Replay.documentsSentinel(spark))
       .where(col("doc_id") >= 0)
-      .select(toks.as("toks")).where(size(col("toks")) >= 2)
+      .select(graft.operators.TextAnalysis.lmToks.as("toks"))
+      .where(size(col("toks")) >= 2)
     val uni = base().select(explode(col("toks")).as("key"))
       .select(lit("u").as("kind"), col("key"))
     val bi = base().select(explode(expr(
@@ -3329,18 +3069,9 @@ object StreamQueries {
         col("h.est_cnt").as("cb"))
       .select(element_at(col("ws"), 1).as("w1"),
         element_at(col("ws"), 2).as("w2"), col("cb"))
-    val tt = served.where(col("kind") === "u").select(col("total").as("tt"))
-    val tb = served.where(col("kind") === "b").select(col("total").as("tb"))
-    b.where(col("cb") >= 5)
-      .join(u.select(col("w").as("w1"), col("cw").as("c1")), Seq("w1"))
-      .join(u.select(col("w").as("w2"), col("cw").as("c2")), Seq("w2"))
-      .join(broadcast(tt), lit(true))
-      .join(broadcast(tb), lit(true))
-      .select(col("w1"), col("w2"), col("cb"), col("c1"), col("c2"),
-        (col("cb").cast("double") * col("tt").cast("double")
-          * col("tt").cast("double")
-          / (col("tb").cast("double") * col("c1").cast("double")
-            * col("c2").cast("double"))).as("lift"))
+    // the witness above makes Σ cw / Σ cb the exact totals, so t41's
+    // lift join applies to the served counts as they stand
+    graft.operators.TextAnalysis.liftOf(b, u)
   }
 
   private val StPmiCap = 4096
@@ -3594,13 +3325,8 @@ object StreamQueries {
     * (capacity binding) remains the spec-bounded residue.
     */
   val st81_stream_quantile_exact: Q = (spark, dir) => {
-    val base = Replay.eventsStream(spark, dir)
-      .where(col("user_id") >= 0 && col("value").isNotNull &&
-        col("event_id") < 4000L)
-      .groupBy(col("event_type"))
-      .agg(graft.functions.QuantileSketch.quantileSketch(4096)(col("value")).as("s"))
-      .select(col("event_type"), col("s.n_events").as("n_events"),
-        col("s.p50").as("p50"), col("s.p90").as("p90"), col("s.p99").as("p99"))
+    val base = graft.operators.Relational.exactQuantilesOf(
+      Replay.eventsStream(spark, dir).where(col("user_id") >= 0))
     upsertServe(spark, base, Seq("event_type"), "n_events")
   }
 
@@ -3925,20 +3651,9 @@ object StreamQueries {
     * and is excluded by the deterministic corruption predicate's
     * domain (event_id ≥ 0). Oracle is p14's verbatim.
     */
-  val st48_stream_corrupt_route: Q = (spark, dir) => {
-    val raw = when(col("event_id") % 11 === 0 && col("event_id") >= 0,
-      concat(lit("}"), col("props"))).otherwise(col("props"))
-    val out = Replay.eventsStream(spark, dir)
-      .where(col("event_id") >= 0)
-      .select(col("event_id"), raw.as("raw"))
-      .withColumn("p", from_json(col("raw"), "k STRING, _corrupt STRING",
-        java.util.Map.of("columnNameOfCorruptRecord", "_corrupt")))
-      .select(col("event_id"),
-        when(col("p._corrupt").isNull, col("p.k")).as("k"),
-        col("p._corrupt").isNotNull.as("quarantined"),
-        when(col("p._corrupt").isNotNull, col("raw")).as("raw_payload"))
-    Replay.runAppend(spark, out)
-  }
+  val st48_stream_corrupt_route: Q = (spark, dir) =>
+    Replay.runAppend(spark, graft.operators.Relational.corruptRouteOf(
+      Replay.eventsStream(spark, dir).where(col("event_id") >= 0)))
 
   /** D-family streaming — FUZZY MATCH AT INGEST (streaming twin of
     * d15, st38's probe-the-standing-index discipline applied to edit
@@ -4044,24 +3759,9 @@ object StreamQueries {
     * no watermark (update mode), the sentinel pre-filtered by id.
     */
   val st52_stream_ohlc_serve: Q = (spark, dir) => {
-    val ord = struct(col("tsu"), col("event_id"))
-    val base = Replay.eventsStream(spark, dir)
-      .where(col("event_id") >= 0 && col("value").isNotNull)
-      .select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd HH").as("hour"),
-        graft.Tables.cents(col("value")).cast("long").as("c"),
-        unix_micros(col("ts")).as("tsu"), col("event_id"))
-      .groupBy(col("event_type"), col("hour"))
-      .agg(
-        min_by(col("c"), ord).as("open_cents"),
-        max(col("c")).as("high_cents"),
-        min(col("c")).as("low_cents"),
-        max_by(col("c"), ord).as("close_cents"),
-        count(lit(1)).as("n_events"))
+    val base = graft.operators.Relational.ohlcOf(
+      Replay.eventsStream(spark, dir).where(col("event_id") >= 0))
     upsertServe(spark, base, Seq("event_type", "hour"), "n_events")
-      .select(col("event_type"), col("hour"), col("open_cents"),
-        col("high_cents"), col("low_cents"), col("close_cents"),
-        col("n_events"))
   }
 
   /** A-family streaming — THE COUNT-MIN SKETCH MAINTAINED AT INGEST
@@ -4077,36 +3777,9 @@ object StreamQueries {
     */
   val st53_stream_cms_serve: Q = (spark, dir) => {
     val R = graft.operators.Relational
-    val P = graft.functions.Portable
-    val h = P.hash60(concat(lit("cms:"), col("user_id").cast("string")))
-    val rows = (0 until R.CmsDepth).map(r =>
-      struct(lit(r.toLong).as("r"),
-        pmod(P.xorMix(r, h), lit(R.CmsWidth)).as("bucket")))
-    val build = Replay.eventsStream(spark, dir)
-      .where(col("event_id") >= 0)
-      .select(col("user_id"), explode(array(rows: _*)).as("rb"))
-      .groupBy(col("rb.r").as("r"), col("rb.bucket").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-    val cms = upsertServe(spark, build, Seq("r", "bucket"), "cnt")
-    val probes = graft.Tables.customer(spark, dir)
-      .where(col("c_custkey") % 50 === 0)
-      .select(col("c_custkey").as("user_id"))
-    val ph = P.hash60(concat(lit("cms:"), col("user_id").cast("string")))
-    val probeRows = probes.select(col("user_id"),
-      explode(array((0 until R.CmsDepth).map(r =>
-        struct(lit(r.toLong).as("r"),
-          pmod(P.xorMix(r, ph), lit(R.CmsWidth)).as("bucket"))): _*)).as("rb"))
-      .select(col("user_id"), col("rb.r").as("r"), col("rb.bucket").as("bucket"))
-    val est = probeRows.join(cms, Seq("r", "bucket"), "left")
-      .groupBy(col("user_id"))
-      .agg(min(coalesce(col("cnt"), lit(0L))).as("est_cnt"))
-    val exact = graft.Tables.events(spark, dir).groupBy(col("user_id"))
-      .agg(count(lit(1)).as("exact_cnt"))
-    est.join(exact, Seq("user_id"), "left")
-      .select(col("user_id"),
-        coalesce(col("exact_cnt"), lit(0L)).as("exact_cnt"),
-        col("est_cnt"),
-        (col("est_cnt") - coalesce(col("exact_cnt"), lit(0L))).as("overcount"))
+    val build = R.cmsOf(Replay.eventsStream(spark, dir).where(col("event_id") >= 0))
+    R.cmsProbeOf(upsertServe(spark, build, Seq("r", "bucket"), "cnt"),
+      graft.Tables.customer(spark, dir), graft.Tables.events(spark, dir))
   }
 
   /** st51 — THE COMPOSED INGEST FRONT DOOR: ONE streaming pipeline
@@ -4332,7 +4005,6 @@ object StreamQueries {
     val mixH = pmod(
       P.hash60(concat(lit("mix:"), col("doc_id").cast("string"))), lit(10000L))
     val bloomDup = B.mightContain(col("ebits"), P.hash60(col("content_hash")))
-    val toks = filter(split(col("text"), " "), t => length(t) > 0)
     val scrubbed = concat_ws(" ", transform(
       filter(transform(col("chunks"),
           c => struct(c.as("chunk"), P.hash60(c).as("h"))),
@@ -4390,7 +4062,7 @@ object StreamQueries {
             concat(lit("media_"), col("media_lane")))
           .when(col("media_dup"), "media_dup")
           .otherwise("admitted"))
-      .withColumn("toks", toks)
+      .withColumn("toks", graft.operators.TextAnalysis.lmToks)
       .withColumn("chunks", transform(
         sequence(lit(0), ceil(size(col("toks")) / lit(W.toDouble)).cast("int") - 1),
         i => concat_ws(" ", slice(col("toks"), i * W + 1, lit(W)))))

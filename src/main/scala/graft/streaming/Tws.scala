@@ -186,10 +186,13 @@ object Tws {
 
     override def handleInputRows(key: Long, rows: Iterator[OrderArrival],
                                  timerValues: TimerValues): Iterator[OrderHorizon] = {
-      rows.foreach { o =>
+      val horizons = rows.map { o =>
         ledger.appendValue(o)
-        getHandle.registerTimer(o.ts.getTime + ThirtyDaysMs)
-      }
+        o.ts.getTime + ThirtyDaysMs
+      }.toSet
+      // one timer per distinct horizon: a same-date order (this batch
+      // or an earlier one) would re-register an armed timer
+      (horizons -- getHandle.listTimers()).foreach(getHandle.registerTimer)
       Iterator.empty
     }
 

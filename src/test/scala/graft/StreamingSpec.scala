@@ -635,6 +635,41 @@ class StreamingSpec extends SparkSpecBase {
       "ingest near-dup probing diverges from the batch nightly")
   }
 
+  test("twins sharing a batch transform: each st* replay equals its batch query") {
+    val twins = Seq(
+      "st25_stream_quarantine" -> "p12_quarantine",
+      "st48_stream_corrupt_route" -> "p14_corrupt_route",
+      "st52_stream_ohlc_serve" -> "w05_ohlc_candles",
+      "st87_stream_heatmap" -> "w20_weekly_heatmap",
+      "st92_stream_gram_serve" -> "n35_embedding_gram",
+      "st95_stream_ewma" -> "w21_ewma",
+      "st97_stream_waiting_supplier" -> "j33_waiting_supplier",
+      "st98_stream_silent_rich" -> "j31_above_avg_silent",
+      "st100_stream_pmi" -> "t41_pmi_collocations",
+      "st102_stream_top_supplier" -> "j44_top_supplier",
+      "st103_stream_large_volume" -> "j45_large_volume",
+      "st104_stream_promo_share" -> "j43_promo_effect",
+      "st110_stream_binary_ingest" -> "s16_binaryfile_source",
+      "st26_stream_mixture_serve" -> "t19_domain_mixture",
+      "st43_stream_kmv_serve" -> "a17_kmv_sample",
+      "st53_stream_cms_serve" -> "a23_count_min",
+      "st57_stream_sample_serve" -> "t28_weighted_sample",
+      "st63_stream_first_seen" -> "w08_cumulative_users",
+      "st81_stream_quantile_exact" -> "a14x_quantile_exact",
+      "st85_stream_rollup_serve" -> "a49_rollup_revenue",
+      "st88_stream_new_vs_ret" -> "a50_new_vs_returning")
+    def rows(name: String) = SparkEntry.queries(name)(spark, sf)
+      .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val mismatched = twins.flatMap { case (st, batch) =>
+      val (s, b) = (rows(st), rows(batch))
+      if (s.nonEmpty && s == b) None
+      else Some(s"$st vs $batch (${s.size} vs ${b.size} rows)")
+    }
+    spark.catalog.clearCache()
+    assert(mismatched.isEmpty,
+      s"streamed twins diverge from their batch query: ${mismatched.mkString("; ")}")
+  }
+
   test("retention: the cohort is the MIN day even when the earliest event arrives last") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._

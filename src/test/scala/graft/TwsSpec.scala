@@ -46,6 +46,22 @@ class TwsSpec extends SparkSpecBase {
     Replay.runUntilDrained(q)
   }
 
+  /** One AvailableNow pass of the st112 timer processor over `ms`,
+    * appending its fired horizons to the parquet table at `outDir`.
+    */
+  private def runTimers(ms: MemoryStream[Tws.OrderArrival], delay: String,
+                        cp: String, outDir: String): Unit = {
+    import spark.implicits._
+    val q = ms.toDF().withWatermark("ts", delay).as[Tws.OrderArrival]
+      .groupByKey(_.o_custkey)
+      .transformWithState(new Tws.OrderTimerProcessor,
+        TimeMode.EventTime(), OutputMode.Append()).toDF()
+      .writeStream.format("parquet")
+      .option("path", outDir).option("checkpointLocation", cp)
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+  }
+
   test("tws profile: ValueState + MapState survive a kill/resume; accumulators continue") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
@@ -151,16 +167,7 @@ class TwsSpec extends SparkSpecBase {
     val ms = MemoryStream[Tws.OrderArrival]
     val cp = tmpDir("cp_tws_timer_")
     val outDir = tmpDir("out_tws_timer_")
-    def out = ms.toDF().withWatermark("ts", "0 seconds").as[Tws.OrderArrival]
-      .groupByKey(_.o_custkey)
-      .transformWithState(new Tws.OrderTimerProcessor,
-        TimeMode.EventTime(), OutputMode.Append()).toDF()
-    def run(): Unit = {
-      val q = out.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", cp)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def run(): Unit = runTimers(ms, "0 seconds", cp, outDir)
 
     // Run 1: two orders, 10 days apart — the watermark reaches day 10,
     // so neither +30d horizon (day 30 / day 40) can fire yet.
@@ -179,5 +186,31 @@ class TwsSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(101L -> 2L, 102L -> 2L),
       s"recovered timers must fire post-restart over the recovered ledger: $got")
+  }
+
+  test("tws timers: same-date orders across micro-batches share one timer and all emit") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      Replay.RocksDbProvider)
+    val ms = MemoryStream[Tws.OrderArrival]
+    val cp = tmpDir("cp_tws_samedate_")
+    val outDir = tmpDir("out_tws_samedate_")
+    // a 2-day delay keeps batch 2's same-date order above the watermark
+    def run(): Unit = runTimers(ms, "2 days", cp, outDir)
+    val day = t("2024-01-01 00:00:00")
+
+    ms.addData(Tws.OrderArrival(9L, 201L, day)) // batch 1 arms the horizon
+    run()
+    ms.addData(Tws.OrderArrival(9L, 202L, day)) // batch 2: horizon already armed
+    run()
+    ms.addData(Tws.OrderArrival(9L, 203L, t("2024-06-01 00:00:00"))) // passes it
+    run()
+
+    val got = spark.read.parquet(outDir)
+      .select(col("o_orderkey"), col("n_within"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(201L -> 2L, 202L -> 2L),
+      s"one shared horizon must emit both same-date orders, each counting both: $got")
   }
 }
