@@ -35,13 +35,6 @@ object Portable {
   def duckHash60(s: String): String =
     s"CAST(concat('0x', substr(md5($s), 1, 15)) AS BIGINT)"
 
-  /** Keyed hash family for MinHash: seed `i` mixed into the input. */
-  def hash60Keyed(i: Int, c: Column): Column =
-    hash60(concat(lit(i.toString), lit(":"), c))
-
-  def duckHash60Keyed(i: Int, s: String): String =
-    duckHash60(s"concat('$i', ':', $s)")
-
   /** Fixed 60-bit xor mixers: a cheap portable hash family over an
     * already-hashed value (`h ⊕ seedᵢ`). One md5 per input + k xors
     * replaces k md5 passes — the min-wise quality loss is acceptable

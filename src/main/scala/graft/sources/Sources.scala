@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   * wiring is unit-testable without a broker; `load()` needs the
   * `spark-sql-kafka` connector on the deploy classpath (not shipped in
   * this container, so the Kafka paths are config-only here, while the
-  * file and rate sources run end-to-end in the replay harness/tests).
+  * file source runs end-to-end through `graft.streaming.Replay`).
   *
   * Embedded-broker attempt (round 15, recorded per the r14 brief): an
   * in-process loopback round trip (`kafkaSink` options → broker →
@@ -85,22 +85,6 @@ object Sources {
         col("value").cast("string").as("json"),
         col("topic"), col("partition"), col("offset"), col("timestamp"))
       .withColumn("parsed", from_json(col("json"), schema))
-
-  /** File-drop directory source — the testable unbounded source this
-    * container runs end-to-end (see [[graft.streaming.Replay]]).
-    */
-  def fileSource(spark: SparkSession, path: String, schema: StructType,
-                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(path)
-  }
-
-  /** Rate source — synthetic load for soak/latency testing. */
-  def rateSource(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond)
-      .load()
 
   /** S7 — JDBC batch source (ref utils/MySQLUtil.scala:29-59 arbitrary
     * SQL → row list, driver-side). Re-expressed as a partitioned scan:

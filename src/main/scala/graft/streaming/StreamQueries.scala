@@ -138,18 +138,6 @@ object StreamQueries {
     out.where(col("window_start") < "2090-01-01")
   }
 
-  /** A1/A5/K2/K5 streaming — post-aggregation transactional sink: a
-    * stream-static dim join feeds an update-mode aggregation whose
-    * per-batch deltas land in a [[graft.sinks.KeyedUpsertTable]]
-    * through `foreachBatch` (the reference's collect→MySQL-transaction
-    * sink, ads/TradeMarkAmountApp.scala:59-88, with the atomic commit
-    * marker playing the result+offset transaction). The final table
-    * state must equal the batch a01 aggregation exactly.
-    */
-  /** st07/st13's shared pipeline: run the stream-static enrich +
-    * update-mode aggregation to completion through the keyed upsert
-    * sink, returning the maintained table.
-    */
   /** Run an update-mode aggregation to completion through a
     * [[graft.sinks.KeyedUpsertTable]] and return the maintained table —
     * the ads-serving sink shape shared by st07/st13/st23/st24/st26.
